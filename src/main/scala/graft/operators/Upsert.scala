@@ -33,27 +33,65 @@ object Upsert {
     try body finally sc.setJobDescription(prev)
   }
 
-  /** Distinct values of one column as ONE exchange-free job (r22):
-    * the former `.distinct().collect()` paid an AQE shuffle-stage job
-    * plus the collect job for a control-plane-sized answer (2 jobs per
+  /** Distinct rows of `df` as ONE exchange-free job (r22): the former
+    * `.distinct().collect()` paid an AQE shuffle-stage job plus the
+    * collect job for a control-plane-sized answer (2 jobs per
     * merge/delete, on every micro-batch of every stream gate). A
     * per-task distinct (mapPartitions) needs no exchange; the driver
-    * dedups the ≤ tasks × |values| leftovers — partition-value
-    * cardinality is table-layout-bounded by contract, so the collect
-    * stays control-plane sized at any input size. Nulls survive into
-    * the result for the callers' own require/guard. */
-  private def distinctValuesOneJob(df: DataFrame,
-                                   colName: String): Seq[Any] = {
-    val proj = df.select(col(colName))
-    val enc = org.apache.spark.sql.Encoders.row(proj.schema)
-    proj.mapPartitions { it =>
-      val seen = new java.util.LinkedHashSet[Any]()
-      it.foreach(r => seen.add(r.get(0)))
+    * dedups the ≤ tasks × |rows| leftovers — callers project onto
+    * partition values (and flags), whose cardinality is
+    * table-layout-bounded by contract, so the collect stays
+    * control-plane sized at any input size. Nulls survive into the
+    * result for the callers' own require/guard. */
+  private[graft] def distinctRowsOneJob(df: DataFrame)
+      : Seq[org.apache.spark.sql.Row] =
+    df.mapPartitions { it =>
+      val seen = new java.util.LinkedHashSet[org.apache.spark.sql.Row]()
+      it.foreach(seen.add)
       scala.jdk.CollectionConverters.IteratorHasAsScala(seen.iterator())
-        .asScala.map(v => org.apache.spark.sql.Row(v))
-    }(enc)
-      .collect().toSeq.map(_.get(0)).distinct
+        .asScala
+    }(org.apache.spark.sql.Encoders.row(df.schema))
+      .collect().toSeq.distinct
+
+  private def distinctValuesOneJob(df: DataFrame,
+                                   colName: String): Seq[Any] =
+    distinctRowsOneJob(df.select(col(colName))).map(_.get(0))
+
+  /** A batch's distinct partition values in their string form — the
+    * form dir names and a routing pass carry. */
+  private def partitionStringsOneJob(df: DataFrame,
+                                     partitionCol: String): Seq[String] =
+    distinctRowsOneJob(df.select(col(partitionCol).cast("string")))
+      .map(_.getString(0))
+
+  /** Cluster `df` by the partition column before a partitioned epoch
+    * write (same rationale as IvfIndex.writeAssigned): without it each
+    * shuffle partition drops a fragment into every touched partition
+    * dir — partitions × shuffle-partitions small files, paid by every
+    * subsequent read's listing and per-file task overhead. The exchange
+    * is sized to min(touched partitions, spark.sql.shuffle.partitions)
+    * tasks: a by-column repartition left to AQE coalesces a small slice
+    * into ONE task that writes every touched dir one after another,
+    * while an explicit count is never coalesced. Hash clustering still
+    * sends each partition value to exactly one task, so every touched
+    * dir gets one file set. */
+  private def clusteredForWrite(df: DataFrame, partitionCol: String,
+                                touched: Int): DataFrame = {
+    val shuffle = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    df.repartition(math.max(1, math.min(touched, shuffle)), col(partitionCol))
   }
+
+  /** A batch's partition values (their string form) as the DIRECTORY
+    * NAMES Spark writes for them. */
+  private def partitionDirsOf(partitionCol: String,
+                              values: Seq[String]): Set[String] =
+    values.map { v =>
+      require(v != null,
+        s"null $partitionCol values are not supported by the " +
+          "manifested layout")
+      s"$partitionCol=" + org.apache.spark.sql.catalyst.catalog
+        .ExternalCatalogUtils.escapePathName(v)
+    }.toSet
 
   def merge(target: DataFrame, updates: DataFrame, keys: Seq[String]): DataFrame = {
     val u = updates.withColumn("_is_upd", lit(true)).alias("u")
@@ -704,7 +742,20 @@ object Upsert {
                           tablePath: String, updates: DataFrame,
                           keys: Seq[String], partitionCol: String,
                           version: String, retain: Int = 2,
-                          statsCols: Seq[String] = Seq.empty): Unit = {
+                          statsCols: Seq[String] = Seq.empty): Unit =
+    mergeIntoManifestedTouched(spark, tablePath, updates, keys,
+      partitionCol, version, retain, statsCols, None)
+
+  /** [[mergeIntoManifested]] for a caller that already knows the
+    * batch's partition values (their string form, as a routing pass
+    * over the batch computes them — see MergeSink.startCdc): `touched`
+    * replaces the merge's own touched-partition collect job. None
+    * collects them here. */
+  private[graft] def mergeIntoManifestedTouched(
+      spark: org.apache.spark.sql.SparkSession, tablePath: String,
+      updates: DataFrame, keys: Seq[String], partitionCol: String,
+      version: String, retain: Int, statsCols: Seq[String],
+      touched: Option[Seq[String]]): Unit = {
     import org.apache.spark.sql.SaveMode
     require(keys.contains(partitionCol),
       s"$partitionCol must be part of the merge key, or rows could move partitions")
@@ -720,10 +771,6 @@ object Upsert {
         .filter(st => st.isDirectory && st.getPath.getName.contains("="))
         .map(_.getPath.getName)
     }
-    // max-(version, rest…)-wins via the partial-aggregated struct max —
-    // same winner, no per-key sort (see latestRowPerKey)
-    def dedupLatest(u: DataFrame): DataFrame =
-      latestRowPerKey(u, keys, version)
     // WRITER LEASE (VERDICT r18 #6): every manifested writer — merge,
     // delete, compact, rename, drop — serializes on one per-table
     // maintenance lease, so two concurrent writers can never share an
@@ -744,11 +791,6 @@ object Upsert {
             "mid-operation (stale-lease takeover by a competing " +
             "writer) — aborting before publish; re-run to retry " +
             "against the new head")
-    // cluster by the partition column before every partitioned write
-    // (same rationale as IvfIndex.writeAssigned): without it each
-    // shuffle partition drops a fragment into every touched partition
-    // dir — partitions × shuffle-partitions small files, paid by every
-    // subsequent read's listing and per-file task overhead
     EpochManifest.activeRoot(fs, root) match {
       case None =>
         // the same non-null partition invariant every LATER write path
@@ -769,9 +811,12 @@ object Upsert {
             s"null $partitionCol values are not supported by the " +
               "manifested layout")))
             .otherwise(col(partitionCol)))
+        // max-(version, rest…)-wins (latestRowPerKey) over rows already
+        // clustered by the partition column: the key set contains it,
+        // so the aggregate and the partitioned write share ONE exchange
         labeled(spark, s"mergem: bootstrap epoch 0 write ($tablePath)") {
-          dedupLatest(guarded).repartition(col(partitionCol))
-            .write.mode(SaveMode.Overwrite).partitionBy(partitionCol)
+          latestRowPerKey(guarded.repartition(col(partitionCol)), keys,
+            version).write.mode(SaveMode.Overwrite).partitionBy(partitionCol)
             .parquet(epochDir(0))
         }
         val stats0 = computeStats(
@@ -786,17 +831,11 @@ object Upsert {
         // touched partitions, as the DIRECTORY NAMES Spark writes for
         // them — dir-level pruning against the manifest, no data read
         // for the untouched mass
-        val touchedDirs = labeled(spark,
-            s"mergem: touched-partition collect ($tablePath)") {
-          distinctValuesOneJob(
-            updates.select(col(partitionCol).cast("string")), partitionCol)
-          }.map { v =>
-            require(v != null,
-              s"null $partitionCol values are not supported by the " +
-                "manifested layout")
-            s"$partitionCol=" + org.apache.spark.sql.catalyst.catalog
-              .ExternalCatalogUtils.escapePathName(v.asInstanceOf[String])
-          }.toSet
+        val touchedDirs = partitionDirsOf(partitionCol,
+          touched.getOrElse(labeled(spark,
+              s"mergem: touched-partition collect ($tablePath)") {
+            partitionStringsOneJob(updates, partitionCol)
+          }))
         // v2 (sharded manifest, VERDICT r18 #1): resolve ONLY the
         // touched buckets' leaves — the untouched mass is neither
         // read nor rewritten, so the whole publish is O(touched)
@@ -880,39 +919,36 @@ object Upsert {
           }
         }
         val pmap = pmapOf(lines)
-        val targetSlice = touchedEntries.groupBy(_._2).toSeq.map {
-          case (e, es) =>
-            val rd = spark.read.option("basePath", epochDir(e))
-            val raw = sliceSchema.fold(
-              rd.parquet(es.map(en => s"${epochDir(e)}/${en._1}"): _*)
-                .withColumn(partitionCol, col(partitionCol)
-                  .cast(updates.schema(partitionCol).dataType)))(sch => {
-              // renamed columns: read under this epoch's PHYSICAL
-              // names, alias back to logical in one select
-              val m = pmap.getOrElse(e, Map.empty[String, String])
-              val df = rd.schema(physSchemaFor(sch, m))
-                .parquet(es.map(en => s"${epochDir(e)}/${en._1}"): _*)
-              df.select(sch.fieldNames.map(n =>
-                col(physNameFor(n, m)).as(n)): _*)
-            })
-            cols.foldLeft(raw) { (df, c) =>
-              if (df.columns.exists(_.equalsIgnoreCase(c))) df
-              else df.withColumn(c,
-                lit(null).cast(updates.schema(c).dataType))
-            // the cast lifts widened columns to the updates' type (a
-            // no-op select for unchanged ones) so the merge below
-            // unions type-identically
-            }.select(cols.map(c =>
-              // nullability-relaxed cast target: identical for every
-              // primitive; for nested types it keeps the cast resolvable
-              // when the batch's containsNull is stricter than history
-              col(c).cast(graft.sources.ManifestFileIndex
-                .asNullable(updates.schema(c).dataType)).as(c)): _*)
-        }.reduceOption(_ unionByName _)
-        val merged = targetSlice match {
-          case Some(ts) => mergeVersioned(ts, updates, keys, version)
-          case None => dedupLatest(updates) // all-new partitions
+        // the touched slice resolves through readMapped — under the
+        // recorded schema from the manifest's `#files` inventories, so
+        // no epoch dir is listed (legacy manifests list and infer)
+        val storedSlice = readMapped(spark, tablePath, touchedEntries,
+          sliceSchema, pmap, filesOf(lines))
+        // add-column backfill as typed nulls, then the cast that lifts
+        // widened columns (and an inferred partition column) to the
+        // updates' type, a no-op for unchanged ones, so the union below
+        // is type-identical. The cast target is nullability-relaxed:
+        // identical for every primitive; for nested types it keeps the
+        // cast resolvable when the batch's containsNull is stricter
+        // than history.
+        val targetSlice = storedSlice.map { raw =>
+          cols.foldLeft(raw) { (df, c) =>
+            if (df.columns.exists(_.equalsIgnoreCase(c))) df
+            else df.withColumn(c,
+              lit(null).cast(updates.schema(c).dataType))
+          }.select(cols.map(c =>
+            col(c).cast(graft.sources.ManifestFileIndex
+              .asNullable(updates.schema(c).dataType)).as(c)): _*)
         }
+        // mergeVersioned's resolution (max-(version, rest…)-wins) over
+        // target slice ∪ batch, clustered by the partition column FIRST:
+        // the key set contains it, so HashPartitioning(partitionCol)
+        // already satisfies the aggregate and the aggregate and the
+        // partitioned epoch write share ONE exchange
+        val merged = latestRowPerKey(clusteredForWrite(
+          targetSlice.fold(updates)(ts =>
+            ts.unionByName(updates.select(ts.columns.map(col): _*))),
+          partitionCol, touchedDirs.size), keys, version)
         // fresh epoch dir: the merge never reads what it writes, so
         // there is no self-read-overwrite race and no tmp staging; a
         // kill before publish leaves an unreferenced dir the retry's
@@ -925,8 +961,7 @@ object Upsert {
         EpochManifest.writeIntent(fs, root, epoch + 1)
         graft.FailPoint.hit("mergem_before_epoch_write")
         labeled(spark, s"mergem: epoch ${epoch + 1} write ($tablePath)") {
-          merged.repartition(col(partitionCol))
-            .write.mode(SaveMode.Overwrite).partitionBy(partitionCol)
+          merged.write.mode(SaveMode.Overwrite).partitionBy(partitionCol)
             .parquet(epochDir(epoch + 1))
         }
         graft.FailPoint.hit("mergem_after_epoch_write")
@@ -1579,7 +1614,18 @@ object Upsert {
   def deleteKeysFromManifested(spark: org.apache.spark.sql.SparkSession,
                                tablePath: String, keyBatch: DataFrame,
                                keys: Seq[String], partitionCol: String,
-                               retain: Int = 2): Unit = {
+                               retain: Int = 2): Unit =
+    deleteKeysFromManifestedTouched(spark, tablePath, keyBatch, keys,
+      partitionCol, retain, None)
+
+  /** [[deleteKeysFromManifested]] for a caller that already knows the
+    * key batch's partition values (their string form): `touched`
+    * replaces the delete's own touched-partition collect job, exactly
+    * as in [[mergeIntoManifestedTouched]]. None collects them here. */
+  private[graft] def deleteKeysFromManifestedTouched(
+      spark: org.apache.spark.sql.SparkSession, tablePath: String,
+      keyBatch: DataFrame, keys: Seq[String], partitionCol: String,
+      retain: Int, touched: Option[Seq[String]]): Unit = {
     require(keys.contains(partitionCol),
       s"$partitionCol must be part of the delete key — it locates the " +
         "touched partitions")
@@ -1593,17 +1639,11 @@ object Upsert {
       val (epoch, rootInfo) = EpochManifest.activeRoot(fs, root)
         .getOrElse(throw new IllegalStateException(
           s"manifest vanished under $tablePath"))
-      val touchedDirs = labeled(spark,
-          s"mergem: delete touched-partition collect ($tablePath)") {
-        distinctValuesOneJob(
-          keyBatch.select(col(partitionCol).cast("string")), partitionCol)
-        }.map { v =>
-          require(v != null,
-            s"null $partitionCol values are not supported by the " +
-              "manifested layout")
-          s"$partitionCol=" + org.apache.spark.sql.catalyst.catalog
-            .ExternalCatalogUtils.escapePathName(v.asInstanceOf[String])
-        }.toSet
+      val touchedDirs = partitionDirsOf(partitionCol,
+        touched.getOrElse(labeled(spark,
+            s"mergem: delete touched-partition collect ($tablePath)") {
+          partitionStringsOneJob(keyBatch, partitionCol)
+        }))
       // v2: resolve only the touched buckets' leaves — the delete's
       // discovery, rewrite, AND publish are all O(touched)
       val lines =
@@ -1618,10 +1658,18 @@ object Upsert {
         val schemaOpt = ddlOf(lines)
           .map(org.apache.spark.sql.types.StructType.fromDDL)
         val pmap = pmapOf(lines)
+        // a broadcast hash anti-join: the slice streams through it with
+        // no exchange and no sort, so the write's clustering exchange is
+        // its only one — a hot partition's rows all land in one task
+        // there, which must not sort them by key as well. The key batch
+        // is a key list, small next to the slice it prunes; duplicate
+        // keys need no distinct. The output is the slice's own columns,
+        // so a key batch typed wider than the stored keys never widens
+        // what the rewrite writes.
         val kept = readMapped(spark, tablePath, touchedEntries, schemaOpt,
           pmap, filesOf(lines)).get
-          .join(keyBatch.select(keys.map(col): _*).distinct(),
-            keys, "left_anti")
+          .join(broadcast(keyBatch.select(keys.map(col): _*)), keys,
+            "left_anti")
         // only the partitions the batch actually named rewrite (its
         // other named values matched no entry and contribute nothing)
         publishRewrittenSlice(tablePath, fs, root, epoch, lines, entries,
@@ -1631,11 +1679,12 @@ object Upsert {
     }
   }
 
-  /** Shared tail of the delete paths: write the kept slice as epoch
-    * N+1, flip the manifest (dropping entries for partitions the
-    * rewrite emptied — they write no dir), carry rename mappings for
-    * epochs still referenced, sweep. Chaos seams on both sides of the
-    * publish. */
+  /** Shared tail of the delete and compaction paths: write the kept
+    * slice, clustered by the partition column ([[clusteredForWrite]]),
+    * as epoch N+1, flip the manifest (dropping entries for partitions
+    * the rewrite emptied — they write no dir), carry rename mappings
+    * for epochs still referenced, sweep. Chaos seams on both sides of
+    * the publish. */
   private def publishRewrittenSlice(tablePath: String,
                                     fs: org.apache.hadoop.fs.FileSystem,
                                     root: org.apache.hadoop.fs.Path,
@@ -1661,7 +1710,7 @@ object Upsert {
     EpochManifest.writeIntent(fs, root, epoch + 1)
     labeled(kept.sparkSession,
         s"mergem: delete epoch ${epoch + 1} write ($tablePath)") {
-      kept.repartition(col(partitionCol))
+      clusteredForWrite(kept, partitionCol, touchedDirs.size)
         .write.mode(SaveMode.Overwrite).partitionBy(partitionCol)
         .parquet(s"$tablePath/_e${epoch + 1}")
     }

@@ -251,8 +251,8 @@ object GraftExtensions {
     * report true, so install never clobbers when it cannot prove the
     * key is unset. Note our own install flips this to true, which also
     * makes a re-install a no-op by construction. */
-  private def thresholdExplicitlySet(spark: SparkSession,
-                                     key: String): Boolean =
+  private[graft] def thresholdExplicitlySet(spark: SparkSession,
+                                            key: String): Boolean =
     try {
       if (spark.sparkContext.getConf.contains(key)) true
       else {

@@ -58,17 +58,32 @@ object MergeSink {
   }
 
   /** CDC APPLY — the Debezium-shaped ingestion path: a stream of
-    * change events carrying an op column (`"delete"` vs anything
-    * else = upsert) maintains the manifested table. Per micro-batch:
-    * reduce to the NET EFFECT per key (max `versionCol` wins; on a
-    * version tie the upsert, deterministically), merge the surviving
-    * upserts ([[Upsert.mergeIntoManifested]] — op column dropped, so
-    * it never leaks into the table schema), then remove the deleted
-    * keys ([[Upsert.deleteKeysFromManifested]] — partition-pruned
-    * straight from the key batch, no table scan). Both halves are
-    * replay-idempotent, and a crash between them re-runs the merge as
-    * a content no-op before the delete applies — so the sink stays
-    * effectively-once on foreachBatch's at-least-once contract.
+    * change events carrying an op column (`"delete"` vs any other
+    * non-null value = upsert; a null op is neither and is dropped)
+    * maintains the manifested table. Per micro-batch:
+    *
+    *   1. reduce to the NET EFFECT per key (max `versionCol` wins; on a
+    *      version tie the upsert, deterministically), checkpointed once
+    *      so both halves read one materialization;
+    *   2. ONE exchange-free ROUTING PASS over the net-effect rows
+    *      returns the distinct (is delete, partition value) pairs,
+    *      under the same predicates as the two halves' filters — it
+    *      decides which halves run and hands each its touched
+    *      partitions, so neither half collects them again;
+    *   3. merge the surviving upserts ([[Upsert.mergeIntoManifested]] —
+    *      op column dropped, so it never leaks into the table schema);
+    *   4. remove the deleted keys ([[Upsert.deleteKeysFromManifested]]
+    *      — partition-pruned straight from the key batch, no table
+    *      scan).
+    *
+    * A batch with both upserts and deletes publishes TWO epochs, merge
+    * then delete: each half is its own leased, fenced, replay-
+    * idempotent commit, and change-feed consumers read each epoch as
+    * one kind of change. A crash between them re-runs the merge as a
+    * content no-op before the delete applies — so the sink stays
+    * effectively-once on foreachBatch's at-least-once contract. A batch
+    * with nothing to apply publishes nothing.
+    *
     * Cross-batch, deletes carry the versioned-merge caveat
     * [[Upsert.deleteFromManifested]] documents: a redelivery of a
     * PRE-delete batch would re-insert its keys; Structured Streaming
@@ -97,23 +112,27 @@ object MergeSink {
         val latest = batch.withColumn("_rn", row_number().over(w))
           .filter(col("_rn") === 1).drop("_rn")
           .localCheckpoint() // one materialization serves both halves
-        // ONE pass over the (checkpointed) net-effect rows answers all
-        // three routing questions — the former batch.isEmpty +
-        // ups.isEmpty + dels.isEmpty were three extra jobs per
-        // micro-batch, pure fixed drain overhead (r22, guide §1.2)
-        val counts = latest.agg(count(lit(1)).as("_n"),
-          count(when(col(opCol) === "delete", lit(1))).as("_nd")).head()
-        val nDel = counts.getLong(1)
-        val nUps = counts.getLong(0) - nDel
-        if (nUps > 0L)
-          Upsert.mergeIntoManifested(spark, targetDir,
-            latest.filter(col(opCol) =!= "delete").drop(opCol), keys,
-            partitionCol, versionCol)
-        if (nDel > 0L)
-          Upsert.deleteKeysFromManifested(spark, targetDir,
-            latest.filter(col(opCol) === "delete")
-              .select(keys.map(col): _*),
-            keys, partitionCol)
+        val isDelete = col(opCol) === "delete"
+        val isUpsert = col(opCol) =!= "delete"
+        // the routing pass: null for a null op, so such rows route
+        // nowhere, exactly as both filters below drop them
+        val routes = Upsert.distinctRowsOneJob(latest
+          .select(isDelete.as("_del"),
+            col(partitionCol).cast("string").as("_part"))
+          .filter(col("_del").isNotNull))
+        def touched(del: Boolean): Seq[String] =
+          routes.filter(_.getBoolean(0) == del).map(_.getString(1))
+        val upsertParts = touched(false)
+        val deleteParts = touched(true)
+        if (upsertParts.nonEmpty)
+          Upsert.mergeIntoManifestedTouched(spark, targetDir,
+            latest.filter(isUpsert).drop(opCol), keys, partitionCol,
+            versionCol, retain = 2, statsCols = Seq.empty,
+            touched = Some(upsertParts))
+        if (deleteParts.nonEmpty)
+          Upsert.deleteKeysFromManifestedTouched(spark, targetDir,
+            latest.filter(isDelete).select(keys.map(col): _*),
+            keys, partitionCol, retain = 2, touched = Some(deleteParts))
       }
       .start()
   }

@@ -531,6 +531,38 @@ class MergeManifestSpec extends SparkSpec {
     }
   }
 
+  test("deleteKeysFromManifested with a key batch typed wider or " +
+      "narrower than the stored keys keeps the stored types readable") {
+    val path = java.nio.file.Files.createTempDirectory("graft_mmdkt")
+      .toString + "/tbl"
+    Upsert.mergeIntoManifested(spark, path,
+      Seq((1, "a", 1.0, 1L), (2, "a", 2.0, 1L), (3, "b", 3.0, 1L))
+        .toDF("k", "part", "v", "ver"), keys, "part", "ver")
+    def stored() = Upsert.readManifested(spark, path)
+      .select($"k", $"part", $"v").as[(Int, String, Double)]
+      .collect().sortBy(_._1).toSeq
+    // long keys into the int column: (a,1) goes; 2^32 + 2 is no int,
+    // so it must not delete (a,2) the way a wrapping cast would
+    Upsert.deleteKeysFromManifested(spark, path,
+      Seq(("a", 1L), ("a", (1L << 32) + 2)).toDF("part", "k"),
+      keys, "part")
+    assert(Upsert.readManifested(spark, path).schema("k").dataType ==
+      org.apache.spark.sql.types.IntegerType)
+    assert(stored() == Seq((2, "a", 2.0), (3, "b", 3.0)))
+    // a fractional key matches no int key; short keys widen losslessly
+    Upsert.deleteKeysFromManifested(spark, path,
+      Seq(("a", 2.5)).toDF("part", "k"), keys, "part")
+    assert(stored() == Seq((2, "a", 2.0), (3, "b", 3.0)))
+    Upsert.deleteKeysFromManifested(spark, path,
+      Seq(("b", 3.toShort)).toDF("part", "k"), keys, "part")
+    assert(stored() == Seq((2, "a", 2.0)))
+    // the rewritten epochs still merge and read under the recorded type
+    Upsert.mergeIntoManifested(spark, path,
+      Seq((2, "a", 20.0, 2L)).toDF("k", "part", "v", "ver"),
+      keys, "part", "ver")
+    assert(stored() == Seq((2, "a", 20.0)))
+  }
+
   test("zone-map data skipping: readManifestedRange resolves only " +
       "dirs whose min/max can match; stats follow merges, deletes, " +
       "renames, and compaction; pruned dirs are never touched") {

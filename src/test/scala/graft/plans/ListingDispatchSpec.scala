@@ -41,4 +41,16 @@ class ListingDispatchSpec extends SparkSpec {
     GraftExtensions.install(spark)
     assert(spark.conf.get(key) == "100000")
   }
+
+  test("the reflective conf probe tells an explicit setting from the " +
+      "registered default") {
+    // a fresh session shares the context but none of the shared
+    // session's runtime settings: the key serves its default there
+    val fresh = spark.newSession()
+    assert(!GraftExtensions.thresholdExplicitlySet(fresh, key),
+      "a fresh session must not report the key as explicitly set")
+    fresh.conf.set(key, fresh.conf.get(key))
+    assert(GraftExtensions.thresholdExplicitlySet(fresh, key),
+      "an explicit conf.set must be seen, even of the default value")
+  }
 }

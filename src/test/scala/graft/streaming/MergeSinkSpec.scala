@@ -2,8 +2,11 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.operators.Upsert
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 class MergeSinkSpec extends SparkSpec {
   import spark.implicits._
@@ -116,6 +119,103 @@ class MergeSinkSpec extends SparkSpec {
       assert(Upsert.readManifested(spark, target)
         .select($"k", $"part", $"v", $"ver")
         .as[(Long, String, Double, Long)].collect().toSet == got)
+    } finally q.stop()
+  }
+
+  /** Spark jobs `q` submits while `body` runs: the stream thread tags
+    * every job of a micro-batch with the query's run id as its job
+    * group, so concurrent activity on the shared session is not
+    * counted. A job count does not depend on machine load. */
+  private def jobsOf(q: StreamingQuery)(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val group = q.runId.toString
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+            js.properties.getProperty("spark.jobGroup.id") == group)
+          n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try { body; ListenerBusDrain.drain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(l)
+    n.get
+  }
+
+  test("cdc sink commit shape: a mixed batch publishes merge then " +
+      "delete epochs, a one-sided batch one, in a pinned job count") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("mergesinkjobs").toString
+    val target = s"$dir/table"
+    val mem = MemoryStream[(Long, String, Double, Long, String)]
+    val events = mem.toDF().toDF("k", "part", "v", "ver", "op")
+    val q = MergeSink.startCdc(events, target, Seq("part", "k"),
+      "part", "ver", "op", s"$dir/ckpt",
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    def epoch(): Long = Upsert.manifestedEpoch(spark, target).get
+    // (epochs published, jobs submitted) by one micro-batch
+    def push(rows: (Long, String, Double, Long, String)*): (Long, Int) = {
+      val before = epoch()
+      val jobs = jobsOf(q) { mem.addData(rows: _*); q.processAllAvailable() }
+      (epoch() - before, jobs)
+    }
+    try {
+      mem.addData((1 to 16).map(i =>
+        (i.toLong, "p" + (i % 4), i.toDouble, 1L, "upsert")): _*)
+      q.processAllAvailable()
+      val ups = push((1L, "p1", 10.0, 2L, "upsert"),
+        (2L, "p2", 20.0, 2L, "upsert"), (21L, "p3", 21.0, 1L, "upsert"))
+      val del = push((4L, "p0", 0.0, 2L, "delete"),
+        (5L, "p1", 0.0, 2L, "delete"))
+      val mixed = push((6L, "p2", 60.0, 2L, "upsert"),
+        (7L, "p3", 70.0, 2L, "upsert"), (22L, "p0", 22.0, 1L, "upsert"),
+        (8L, "p0", 0.0, 2L, "delete"), (9L, "p1", 0.0, 2L, "delete"))
+      // merge then delete: two epochs for a mixed batch, one otherwise
+      assert((ups._1, del._1, mixed._1) == ((1L, 1L, 2L)))
+      // jobs per micro-batch, before the routing pass and the reworked
+      // epoch writes: upsert-only 8, delete-only 11,
+      // mixed 15. Now: net effect 2 + routing 1 + merge write 2 +
+      // delete write 3 (key broadcast, clustering exchange, write).
+      assert((ups._2, del._2, mixed._2) == ((5, 6, 8)))
+      assert(Upsert.readManifested(spark, target).count() == 14L)
+      // each epoch write clustered by the partition column: every dir
+      // the mixed batch's merge and delete epochs wrote holds one file
+      val e = epoch()
+      for (ep <- Seq(e - 1, e)) {
+        val dirs = new java.io.File(s"$target/_e$ep").listFiles()
+          .filter(_.isDirectory)
+        assert(dirs.nonEmpty)
+        dirs.foreach(d => assert(
+          d.listFiles().count(_.getName.endsWith(".parquet")) == 1, d))
+      }
+    } finally q.stop()
+  }
+
+  test("cdc sink: rows with a null op are neither counted nor applied; " +
+      "a batch of only such rows publishes no epoch") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("mergesinknullop").toString
+    val target = s"$dir/table"
+    val mem = MemoryStream[(Long, String, Double, Long, String)]
+    val events = mem.toDF().toDF("k", "part", "v", "ver", "op")
+    val q = MergeSink.startCdc(events, target, Seq("part", "k"),
+      "part", "ver", "op", s"$dir/ckpt",
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    def got(): Set[(Long, String, Double, Long)] =
+      Upsert.readManifested(spark, target)
+        .select($"k", $"part", $"v", $"ver")
+        .as[(Long, String, Double, Long)].collect().toSet
+    try {
+      mem.addData((1L, "a", 1.0, 1L, "upsert"), (2L, "b", 2.0, 1L, "upsert"))
+      q.processAllAvailable()
+      val epoch0 = Upsert.manifestedEpoch(spark, target)
+      mem.addData((3L, "a", 3.0, 1L, null), (1L, "b", 9.0, 2L, null))
+      q.processAllAvailable()
+      assert(Upsert.manifestedEpoch(spark, target) == epoch0)
+      // a null-op row beside an upsert: only the upsert lands
+      mem.addData((4L, "c", 4.0, 1L, null), (2L, "b", 20.0, 2L, "upsert"))
+      q.processAllAvailable()
+      assert(Upsert.manifestedEpoch(spark, target) == epoch0.map(_ + 1L))
+      assert(got() == Set((1L, "a", 1.0, 1L), (2L, "b", 20.0, 2L)))
     } finally q.stop()
   }
 }
