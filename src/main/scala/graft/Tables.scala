@@ -94,7 +94,7 @@ object Tables {
     * overrides the target; ≤1 disables).
     *
     * The split count is derived from the LOGICAL plan's file relations
-    * (file count and total bytes against `maxPartitionBytes`) — never
+    * (Spark's own split sizing and file packing over their files) — never
     * from `df.rdd`, which finalizes the physical plan and under AQE
     * would eagerly materialize any upstream query stages (a hidden job
     * at plan-build time — ADVICE r21). A plan with no file scan at its
@@ -128,30 +128,34 @@ object Tables {
 
   /** Estimated scan-split count of `df`'s file relations, from logical
     * plan metadata only (no physical planning, no jobs): per relation,
-    * max(file count, ceil(bytes / maxPartitionBytes)) — the same two
-    * quantities Spark's own split packing is bounded by (a file is
-    * never merged below one split here, which over-estimates when many
-    * tiny files pack into one split; over-estimating only skips the
-    * spread, never adds a wasted exchange). None when the plan has no
-    * file relation — the caller broke the scan-rooted contract and
-    * spread declines to act. */
-  private def scanSplitEstimate(df: DataFrame): Option[Int] = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val maxSplit = df.sparkSession.conf
-      .get("spark.sql.files.maxPartitionBytes", "134217728")
-      .stripSuffix("b").stripSuffix("B") match {
-        case s if s.forall(_.isDigit) => s.toLong
-        case _ => 134217728L
-      }
+    * the count a file scan of it plans — Spark's own
+    * `FilePartition.maxSplitBytes` (`spark.sql.files.maxPartitionBytes`
+    * as the session parses it, `openCostInBytes`, the leaf parallelism)
+    * and its `getFilePartitions` packing, applied to the relation's
+    * (partition-pruned) files split as a scan splits them, so many tiny
+    * files pack into few splits exactly as they will at execution.
+    * None when the plan has no file relation — the caller broke the
+    * scan-rooted contract and spread declines to act. */
+  private[graft] def scanSplitEstimate(df: DataFrame): Option[Int] = {
+    import org.apache.spark.sql.execution.PartitionedFileUtil
+    import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
     val rels = df.queryExecution.optimizedPlan.collect {
       case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
         l.relation.asInstanceOf[HadoopFsRelation]
     }
     if (rels.isEmpty) None
     else Some(rels.map { r =>
-      val files = math.max(1L, r.location.inputFiles.length.toLong)
-      val bySize = (r.sizeInBytes + maxSplit - 1) / maxSplit
-      math.min(Int.MaxValue.toLong, math.max(files, bySize)).toInt
+      val spark = r.sparkSession
+      val dirs = r.location.listFiles(Nil, Nil)
+      val maxSplit = FilePartition.maxSplitBytes(spark, dirs)
+      val splits = dirs.flatMap { d =>
+        d.files.flatMap { f =>
+          PartitionedFileUtil.splitFiles(f, f.getPath,
+            r.fileFormat.isSplitable(spark, r.options, f.getPath),
+            maxSplit, d.values)
+        }
+      }.sortBy(-_.length)
+      math.max(1, FilePartition.getFilePartitions(spark, splits, maxSplit).size)
     }.sum)
   }
 }

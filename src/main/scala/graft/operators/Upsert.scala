@@ -53,10 +53,6 @@ object Upsert {
     }(org.apache.spark.sql.Encoders.row(df.schema))
       .collect().toSeq.distinct
 
-  private def distinctValuesOneJob(df: DataFrame,
-                                   colName: String): Seq[Any] =
-    distinctRowsOneJob(df.select(col(colName))).map(_.get(0))
-
   /** A batch's distinct partition values in their string form — the
     * form dir names and a routing pass carry. */
   private def partitionStringsOneJob(df: DataFrame,
@@ -261,10 +257,13 @@ object Upsert {
   }
 
   /** Materialize a merge slice that must be evaluated exactly once
-    * before an overwrite of (some of) the files it reads — the
-    * self-read-overwrite barrier shared by the partitioned and
-    * manifested-SCD2 merges. Strategy (`spark.graft.merge.staging`,
-    * r22 — ADVICE r21 medium):
+    * before the actions that consume it — the staging barrier of
+    * [[scd2MergeManifested]], its only caller, whose content token,
+    * closed append and current write would each replay the full-outer
+    * join otherwise. ([[mergeIntoPartitioned]] needs no barrier: its
+    * dynamic overwrite swaps partition dirs in only after every task
+    * has read.) Strategy (`spark.graft.merge.staging`, r22 — ADVICE
+    * r21 medium):
     *
     *   - `local`   — eager `localCheckpoint`: no parquet encode +
     *                 re-list + decode round trip, but the staged slice
@@ -333,64 +332,119 @@ object Upsert {
   def mergeIntoPartitioned(spark: org.apache.spark.sql.SparkSession,
                            tablePath: String, updates: DataFrame,
                            keys: Seq[String], partitionCol: String,
-                           version: String): Unit = {
+                           version: String): Unit =
+    mergeIntoPartitionedTouched(spark, tablePath, updates, keys,
+      partitionCol, version, None)
+
+  /** [[mergeIntoPartitioned]] for a caller that already knows the
+    * batch's partition values (their string form, nulls kept — as
+    * [[graft.pipeline.Ingest.reconcile]]'s counting pass returns them):
+    * `touched` replaces the merge's own touched-partition collect job.
+    * None collects them here. */
+  private[graft] def mergeIntoPartitionedTouched(
+      spark: org.apache.spark.sql.SparkSession, tablePath: String,
+      updates: DataFrame, keys: Seq[String], partitionCol: String,
+      version: String, touched: Option[Seq[String]]): Unit = {
     require(keys.contains(partitionCol),
       s"$partitionCol must be part of the merge key, or rows could move partitions")
-    val touched = labeled(spark,
-        s"merge: touched-partition collect ($tablePath)") {
-      distinctValuesOneJob(updates, partitionCol)
-    }
-    val exists = new org.apache.hadoop.fs.Path(tablePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(new org.apache.hadoop.fs.Path(tablePath))
     require(updates.columns.contains(version),
       s"mergeIntoPartitioned needs the $version column on the updates " +
         "(a delivery sequence — file mtime, batch id); the table stores it")
-    val merged =
-      if (!exists) {
-        // first write still resolves within-batch duplicates per key
-        val rest = updates.columns.toSeq
-          .filterNot(c => keys.contains(c) || c == version)
-        val w = Window.partitionBy(keys.map(col): _*)
-          .orderBy(col(version).desc +: rest.map(col(_).desc): _*)
-        updates.withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") === 1).drop("_rn")
-      } else {
-        val targetSlice = spark.read.parquet(tablePath)
-          .filter(col(partitionCol).isin(touched: _*))
-        mergeVersioned(targetSlice, updates, keys, version)
-      }
-    // the merged slice reads the very partitions the dynamic overwrite
-    // replaces — materialize it BEFORE the overwrite so the write job
-    // never scans its own output path (self-read-overwrite race).
-    // Staging strategy is SIZE/DEPLOYMENT-GATED via stageSlice (r22,
-    // ADVICE r21 medium): local[*] masters stage through an eager
-    // localCheckpoint (no parquet round trip; executor loss IS driver
-    // loss there, so the durability gap is empty), real clusters stage
-    // through a durable tmp-parquet dir (an executor lost mid-overwrite
-    // must not kill a 100 TB merge with no lineage to recompute from).
-    // Crash shape identical either way: a kill before the overwrite
-    // leaves the table untouched and the replay re-merges
-    // (AuditChaosSpec's merge_after_tmp_write site, both modes).
-    val (staged, cleanupStaging) =
-      stageSlice(spark, merged, s"$tablePath._merge_tmp")
+    val parts = touched.getOrElse(labeled(spark,
+        s"merge: touched-partition collect ($tablePath)") {
+      partitionStringsOneJob(updates, partitionCol)
+    })
+    val rows = partitionedSchema(spark, tablePath, partitionCol,
+        updates.schema(partitionCol).dataType) match {
+      // first write: the batch alone, still resolved per key below
+      case None => updates
+      case Some(schema) =>
+        // schema given, so the read plans without Spark's footer job;
+        // selecting the stored columns from the updates fails loudly
+        // when the batch lacks one (an extra batch column is dropped,
+        // as mergeVersioned does)
+        val targetSlice = spark.read.schema(schema).parquet(tablePath)
+          .filter(col(partitionCol).cast("string").isin(parts: _*))
+        targetSlice.unionByName(
+          updates.select(targetSlice.columns.map(col): _*))
+    }
+    // mergeVersioned's resolution, clustered by the partition column
+    // FIRST: the key set contains it, so HashPartitioning(partitionCol)
+    // already satisfies the aggregate — the aggregate and the
+    // partitioned write share ONE exchange, and each touched partition
+    // dir gets one file
+    val merged = latestRowPerKey(
+      clusteredForWrite(rows, partitionCol, parts.size), keys, version)
+    // No staging before the overwrite. The merged slice reads the very
+    // partitions the write replaces, but under
+    // partitionOverwriteMode=dynamic Spark writes every task's output
+    // under `<table>/.spark-staging-<job>` and swaps the partition dirs
+    // in only in commitJob, after every task — and so every read of
+    // the old files — has finished. A kill before the overwrite leaves
+    // the table untouched and the replay re-merges (AuditChaosSpec's
+    // merge_after_tmp_write site).
     graft.FailPoint.hit("merge_after_tmp_write")
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try
-      staged.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .partitionBy(partitionCol).parquet(tablePath)
-    finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-      cleanupStaging()
+    finally prev match {
+      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
+      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
     }
     // a kill here = merge landed, caller's bookkeeping didn't; the
     // replay re-merges the same batch and mergeVersioned keeps the
     // table a pure function of the batch set
     graft.FailPoint.hit("merge_after_overwrite")
+  }
+
+  /** The stored schema of a parquet table partitioned (one level) on
+    * `partitionCol`, without a Spark job: the data columns come from
+    * ONE data file's footer, read on the driver the way Spark's own
+    * inference reads it (Spark's row metadata first, else the parquet
+    * schema under the session's conversion settings), and the partition
+    * column is appended with the type the caller gives — a dir value
+    * such as `01` stays the string it was written as instead of being
+    * inferred to an int. `spark.read.parquet` without a schema runs a
+    * footer-reading job per call. None when the table holds no data
+    * file yet. */
+  private[graft] def partitionedSchema(
+      spark: org.apache.spark.sql.SparkSession, tablePath: String,
+      partitionCol: String,
+      partitionType: org.apache.spark.sql.types.DataType)
+      : Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(tablePath)
+    val fs = root.getFileSystem(conf)
+    def visible(st: FileStatus): Boolean = {
+      val n = st.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+    val dataFile =
+      if (!fs.exists(root)) None
+      else fs.listStatus(root).iterator
+        .filter(st => st.isDirectory && visible(st) &&
+          st.getPath.getName.startsWith(s"$partitionCol="))
+        .flatMap(d => fs.listStatus(d.getPath).find(f => f.isFile && visible(f)))
+        .nextOption()
+    dataFile.map { st =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+      val meta = try reader.getFooter.getFileMetaData finally reader.close()
+      import org.apache.spark.sql.execution.datasources.parquet._
+      val data = Option(meta.getKeyValueMetaData
+          .get(ParquetReadSupport.SPARK_METADATA_KEY))
+        .flatMap(j => scala.util.Try(org.apache.spark.sql.types.DataType
+          .fromJson(j).asInstanceOf[org.apache.spark.sql.types.StructType])
+          .toOption)
+        .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+          .convert(meta.getSchema))
+      org.apache.spark.sql.types.StructType(
+        data.filterNot(_.name.equalsIgnoreCase(partitionCol)))
+        .add(partitionCol, partitionType)
+    }
   }
 
   /** [[scd2Merge]] against an on-disk history table partitioned by a

@@ -35,6 +35,11 @@ final class AuditLog(spark: SparkSession, path: String,
   // rounds), so the two encodings coexist in one dir.
   // synchronized: loads run on a driver thread pool (Watch); the
   // counter + create(…, overwrite=false) pair keeps names unique.
+  // VISIBILITY: the row is written under a hidden temp name (a dot
+  // prefix, no `.tsv` suffix, so no listing picks it up) and renamed to
+  // its final name once closed — a concurrent probe never sees the
+  // final name before its bytes. Creating the final name in place let
+  // a probe on another thread parse the still-empty file.
   private val seqNo = new java.util.concurrent.atomic.AtomicLong(0L)
   private val runTag = java.util.UUID.randomUUID().toString.take(8)
   private def enc(s: String): String =
@@ -49,11 +54,15 @@ final class AuditLog(spark: SparkSession, path: String,
     fs.mkdirs(p)
     val line = Seq(enc(eventSource), enc(target), status.toString,
       tsMillis.toString).mkString("\t")
-    val f = new org.apache.hadoop.fs.Path(p,
-      s"audit_${tsMillis}_${runTag}_${seqNo.incrementAndGet()}.tsv")
-    val out = fs.create(f, false)
+    val name = s"audit_${tsMillis}_${runTag}_${seqNo.incrementAndGet()}.tsv"
+    val f = new org.apache.hadoop.fs.Path(p, name)
+    val tmp = new org.apache.hadoop.fs.Path(p, s".$name.tmp")
+    val out = fs.create(tmp, false)
     try out.write(line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
+    // Hadoop rename reports failure by returning false
+    if (!fs.rename(tmp, f))
+      throw new java.io.IOException(s"audit append: rename $tmp -> $f failed")
   }
 
   /** The audit table as a DataFrame (same shape as the former
@@ -80,7 +89,11 @@ final class AuditLog(spark: SparkSession, path: String,
 
   /** Per-file row memo behind the control-plane probes: audit part
     * files are WRITE-ONCE (append-mode parquet adds files, never
-    * rewrites one), so path-keyed rows can never go stale, and the
+    * rewrites one), so path-keyed rows can never go stale — but an
+    * EMPTY parse is never memoized: every file this class writes holds
+    * one row, so an empty parse is a file not yet fully visible (a
+    * torn or in-flight write, or an older writer that created names in
+    * place), and pinning it would hide that file's row forever. The
     * memo's size is O(stages ever probed) — the table's own documented
     * scale. Every probe previously paid a full Spark job over KB-sized
     * files; at three e2e drains × several probes each, the job
@@ -139,7 +152,8 @@ final class AuditLog(spark: SparkSession, path: String,
     val requested = missing.map(_._1).toSet
     if (loaded.keys.forall(requested.contains)) {
       missing.foreach { case (k, _) =>
-        fileRowsCache.putIfAbsent(k, loaded.getOrElse(k, Seq.empty))
+        loaded.get(k).filter(_.nonEmpty)
+          .foreach(rows => fileRowsCache.putIfAbsent(k, rows))
       }
       keyed.flatMap { case (k, _) =>
         fileRowsCache.get(k).orElse(loaded.get(k)).getOrElse(Seq.empty)

@@ -55,7 +55,8 @@ object Ingest {
 
   final case class Reconciled(clean: DataFrame, totalRows: Long,
                               corruptRows: Long, ok: Boolean,
-                              private val raw: DataFrame) {
+                              private val raw: DataFrame,
+                              cleanValues: Seq[String]) {
     /** Drop the cached raw scan. Call once `clean` has been fully
       * consumed (or on the failure path, immediately): Spark's cache
       * matches plans by CANONICALIZED form, so a pinned scan of
@@ -70,9 +71,21 @@ object Ingest {
     * `maxErrors` tolerance (reference default 5, `R22:114`). The raw frame
     * is cached first: Spark refuses corrupt-record-only projections over a
     * raw CSV scan (QUERY_ONLY_CORRUPT_RECORD_COLUMN), and the cache also
-    * means one physical parse feeds both the count and the clean output.
+    * means one physical parse feeds both the counts and the clean output.
+    *
+    * The counts are ONE exchange-free job over the cached scan (the
+    * pattern of [[graft.operators.Upsert.distinctRowsOneJob]]): each task
+    * returns its (total, corrupt) counts, and with `distinctCol` set also
+    * the distinct values of that column over its clean rows, in string
+    * form with nulls kept ([[Reconciled.cleanValues]]). A global
+    * aggregate would pay a cache-build job, an AQE map-stage job and the
+    * result job; a caller that needs the clean rows' partition values
+    * (the ingest merge's touched partitions) would pay one more collect.
+    * The distinct values are control-plane sized only when the column's
+    * cardinality is — callers name a partition column.
     * The caller must [[Reconciled.release]] when done with `clean`. */
-  def reconcile(raw: DataFrame, maxErrors: Long): Reconciled = {
+  def reconcile(raw: DataFrame, maxErrors: Long,
+                distinctCol: Option[String] = None): Reconciled = {
     raw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // every exit either hands cache ownership to Reconciled (whose
     // release() the caller owns) or unpersists before rethrowing — a
@@ -80,16 +93,28 @@ object Ingest {
     // transient IO) must not leak the plan-keyed cache entry for the
     // pipeline's lifetime (ADVICE r12)
     try {
-      val counted = raw
-        .select(when(col(PriceIndex.corruptCol).isNotNull, 1L).otherwise(0L)
-          .as("_bad"))
-        .agg(count(lit(1)).as("total"), sum(col("_bad")).as("bad"))
-        .head()
-      val total = counted.getLong(0)
-      val bad = Option(counted.get(1)).map(_.asInstanceOf[Long]).getOrElse(0L)
+      import raw.sparkSession.implicits._
+      val probe = raw.select(col(PriceIndex.corruptCol).isNotNull.as("_bad"),
+        distinctCol.fold(lit(null).cast("string"))(col(_).cast("string"))
+          .as("_v"))
+      val keep = distinctCol.isDefined
+      val perTask = probe.mapPartitions { it =>
+        var total, bad = 0L
+        val seen = new java.util.LinkedHashSet[String]()
+        it.foreach { r =>
+          total += 1
+          if (r.getBoolean(0)) bad += 1
+          else if (keep) seen.add(r.getString(1))
+        }
+        Iterator((total, bad,
+          scala.jdk.CollectionConverters.SetHasAsScala(seen).asScala.toSeq))
+      }.collect()
+      val total = perTask.map(_._1).sum
+      val bad = perTask.map(_._2).sum
+      val values = perTask.iterator.flatMap(_._3).toSeq.distinct
       val clean = raw.filter(col(PriceIndex.corruptCol).isNull)
         .drop(PriceIndex.corruptCol)
-      Reconciled(clean, total, bad, bad <= maxErrors, raw)
+      Reconciled(clean, total, bad, bad <= maxErrors, raw, values)
     } catch {
       case e: Throwable => raw.unpersist(); throw e
     }

@@ -18,9 +18,19 @@ import org.apache.spark.sql.functions._
   *
   * Scale posture: the permanent table is parquet partitioned by `GEO`
   * (the reference's "split into sub tables" category, `R22:304-316`) so
-  * report filters prune partitions; the merge joins staged rows against
-  * the permanent table on the natural key — broadcast when the staged
-  * side is small, AQE otherwise.
+  * report filters prune partitions; the merge resolves the staged rows
+  * and the touched partitions' rows per natural key (max `_seq` wins)
+  * and dynamically overwrites only those partitions.
+  *
+  * Job shape (the driver-sequenced fixed cost every file pays): a load
+  * into an existing table is 3 Spark jobs — one over the cached CSV scan
+  * for the reconcile counts and the clean rows' distinct GEOs (the
+  * merge's touched partitions), then the merge's one exchange, shared
+  * by the per-key aggregate and the partitioned write, and the write.
+  * The table is read with its known schema, so no read pays a
+  * footer-inference job, and the merge stages nothing before the
+  * overwrite. The scan-path report export is 2 jobs (its aggregate's
+  * exchange and the CSV write). Audit rows are driver-side files.
   */
 object IngestPipeline {
   final case class LoadResult(status: Int, stage: Int, error: String,
@@ -33,6 +43,11 @@ object IngestPipeline {
     * [[graft.FailPoint]] (shared with the SCD2 manifest chaos spec). */
   private[graft] val FailPoint = graft.FailPoint
   private[graft] type Kill = graft.FailPoint.Kill
+
+  /** The permanent table's stored columns: the typed canonical columns
+    * plus the delivery version `_seq` the merge resolves on. */
+  private val storedSchema = PriceIndex.typedSchema
+    .add("_seq", org.apache.spark.sql.types.LongType)
 }
 
 final class IngestPipeline(spark: SparkSession, warehouse: String,
@@ -102,7 +117,9 @@ final class IngestPipeline(spark: SparkSession, warehouse: String,
       stage = 2; clock.advance(2)
       FailPoint.hit("s2_before_reconcile")
       val raw = Ingest.readPriceIndexCsv(spark, csvPath)
-      val rec = Ingest.reconcile(raw, maxErrors)
+      // one job: the reconcile counts plus the clean rows' distinct
+      // GEOs, the partitions the merge touches
+      val rec = Ingest.reconcile(raw, maxErrors, distinctCol = Some("GEO"))
       try {
       FailPoint.hit("s2_after_reconcile")
       if (!rec.ok) {
@@ -154,11 +171,11 @@ final class IngestPipeline(spark: SparkSession, warehouse: String,
         // that runs AFTER sees pre == post but the committed first
         // delta already holds the truth and appendOnce no-ops.
         if (incrementalReport) {
-          appendReportDelta(staged, fileKey(csvPath), seq)
+          appendReportDelta(staged, rec.cleanValues, fileKey(csvPath), seq)
           FailPoint.hit("s3_after_report_delta")
         }
-        Upsert.mergeIntoPartitioned(spark, permanentPath, staged,
-          PriceIndex.naturalKey, "GEO", "_seq")
+        Upsert.mergeIntoPartitionedTouched(spark, permanentPath, staged,
+          PriceIndex.naturalKey, "GEO", "_seq", Some(rec.cleanValues))
       }
       FailPoint.hit("s3_after_merge")
       audit.append("loading: upsert", fileKey(csvPath), 1, now())
@@ -188,7 +205,14 @@ final class IngestPipeline(spark: SparkSession, warehouse: String,
   /** The permanent table (partition-pruned scans for report filters).
     * `_seq` (the delivery version the merge resolves on) is internal
     * bookkeeping — dropped from the read surface. */
-  def permanent(): DataFrame = spark.read.parquet(permanentPath).drop("_seq")
+  def permanent(): DataFrame = stored().drop("_seq")
+
+  /** The permanent table as stored, read with its schema: every load
+    * writes `PriceIndex.typedSchema` plus `_seq`, so the read needs no
+    * footer-inference job, and the `GEO` partition dirs read back as
+    * the strings they were written from. */
+  private def stored(): DataFrame =
+    spark.read.schema(IngestPipeline.storedSchema).parquet(permanentPath)
 
   /** INCREMENTAL REPORT MAINTENANCE (VERDICT r15 #6, the reference's
     * report trigger made delta-sized): per load, the group-grain
@@ -205,16 +229,14 @@ final class IngestPipeline(spark: SparkSession, warehouse: String,
     * a fresh warehouse (or summing into a snapshot) when the delta
     * count dwarfs the group count — at the reference's cadence that is
     * years away. */
-  private def appendReportDelta(staged: DataFrame, key: String,
-                                seq: Long): Unit = {
+  private def appendReportDelta(staged: DataFrame, geos: Seq[String],
+                                key: String, seq: Long): Unit = {
     val t0 = System.nanoTime()
     val fs = new Path(permanentPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val geos = staged.select(col("GEO").cast("string")).distinct()
-      .collect().map(_.getString(0)).toSeq
     val pre =
       if (!fs.exists(new Path(permanentPath))) staged.limit(0)
-      else spark.read.parquet(permanentPath)
+      else stored()
         .filter(col("GEO").isin(geos: _*))
         .join(staged.select(PriceIndex.naturalKey.map(col): _*).distinct(),
           PriceIndex.naturalKey, "left_semi")

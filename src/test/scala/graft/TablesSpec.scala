@@ -84,4 +84,29 @@ class TablesSpec extends SparkSpec {
       .select("user_id", "ts").orderBy("user_id", "ts").collect().toSeq
     assert(a === batch)
   }
+
+  test("spread's split estimate packs many tiny files as the scan " +
+      "does, under any spelling of maxPartitionBytes") {
+    val dir = Files.createTempDirectory("graft-spread-est").toString + "/t"
+    spark.range(0, 640).repartition(64).write.parquet(dir)
+    def check(): Unit = {
+      val df = spark.read.parquet(dir)
+      val est = Tables.scanSplitEstimate(df).get
+      val actual = df.rdd.getNumPartitions
+      assert(math.abs(est - actual) <= 1, s"estimate $est, scan $actual")
+    }
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    try {
+      // the default packs the 64 files into a few splits: a count of
+      // files (64) is no estimate of that
+      check()
+      Seq("128m", "1k", "2048b", "4096").foreach { v =>
+        spark.conf.set(key, v); check()
+      }
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }

@@ -189,6 +189,46 @@ class UpsertIdsSpec extends SparkSpec {
     assert(v == 2L)
   }
 
+  test("mergeIntoPartitioned fails loudly when the updates lack a " +
+      "stored column, and leaves the table as it was") {
+    val table = java.nio.file.Files.createTempDirectory("graft_pmiss")
+      .toString + "/t"
+    Upsert.mergeIntoPartitioned(spark, table,
+      Seq(("A", 1L, 10.0, "x", 1L), ("B", 2L, 20.0, "y", 1L))
+        .toDF("part", "k", "v", "note", "ver"),
+      Seq("part", "k"), "part", "ver")
+    def stored() = spark.read.parquet(table)
+      .select("part", "k", "v", "note", "ver")
+      .as[(String, Long, Double, String, Long)].collect().toSet
+    val before = stored()
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      Upsert.mergeIntoPartitioned(spark, table,
+        Seq(("A", 1L, 99.0, 2L)).toDF("part", "k", "v", "ver"),
+        Seq("part", "k"), "part", "ver")
+    }
+    assert(e.getMessage.contains("note"), e.getMessage)
+    assert(stored() == before)
+  }
+
+  test("mergeIntoPartitioned keeps a numeric-looking string partition " +
+      "value a string: a second merge into it updates, not duplicates") {
+    val table = java.nio.file.Files.createTempDirectory("graft_pstr")
+      .toString + "/t"
+    def merge(rows: (String, Long, Double, Long)*): Unit =
+      Upsert.mergeIntoPartitioned(spark, table,
+        rows.toDF("part", "k", "v", "ver"), Seq("part", "k"), "part", "ver")
+    merge(("01", 1L, 10.0, 1L), ("02", 2L, 20.0, 1L))
+    merge(("01", 1L, 99.0, 2L), ("01", 3L, 30.0, 2L))
+    val schema = Upsert.partitionedSchema(spark, table, "part",
+      org.apache.spark.sql.types.StringType).get
+    assert(schema("part").dataType == org.apache.spark.sql.types.StringType)
+    val got = spark.read.schema(schema).parquet(table)
+      .select("part", "k", "v").as[(String, Long, Double)].collect().toSet
+    assert(got == Set(("01", 1L, 99.0), ("01", 3L, 30.0), ("02", 2L, 20.0)))
+    assert(new java.io.File(table).listFiles().map(_.getName)
+      .filter(_.startsWith("part=")).toSet == Set("part=01", "part=02"))
+  }
+
   test("withDenseId yields a dense 1-based id in order-key order") {
     val df = spark.range(1, 1001).toDF("k")
       .withColumn("k", col("k") * 7 % 1009) // shuffled but unique

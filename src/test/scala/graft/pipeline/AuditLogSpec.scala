@@ -88,4 +88,41 @@ class AuditLogSpec extends SparkSpec {
     assert(audit.checkStatus("loading", "f_never", 1800, now,
       exact = true) == 0)
   }
+
+  test("a probe never sees an append half-written, and an empty parse " +
+      "is not memoized: concurrent writer and readers see every row") {
+    val dir = Files.createTempDirectory("graft_audit_race").toString
+    val audit = new AuditLog(spark, dir)
+    // a row file created in place and filled later (an older writer's
+    // shape): probed while empty, then again once its row is there
+    val late = java.nio.file.Paths.get(dir, "audit_0_legacy_1.tsv")
+    Files.createFile(late)
+    assert(audit.successTargets("loading").isEmpty)
+    Files.writeString(late, "loading\tf_late\t1\t0")
+    assert(audit.successTargets("loading") == Set("f_late"))
+
+    val n = 200
+    val now = System.currentTimeMillis()
+    @volatile var writing = true
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val readers = (1 to 2).map { _ =>
+      val t = new Thread(() => {
+        try while (writing) {
+          audit.successTargets("loading")
+          audit.countFailures("f_0")
+        } catch { case e: Throwable => errors.add(e) }
+      })
+      t.start(); t
+    }
+    try (0 until n).foreach(i => audit.append("loading", s"f_$i", 1, now + i))
+    finally { writing = false; readers.foreach(_.join()) }
+    assert(errors.isEmpty, errors)
+    val want = (0 until n).map(i => s"f_$i").toSet + "f_late"
+    assert(audit.successTargets("loading") == want)
+    assert((0 until n).forall(i =>
+      audit.checkStatus("loading", s"f_$i", 1800, now + n, exact = true) == 1))
+    // no temp name is left behind
+    assert(new java.io.File(dir).listFiles().map(_.getName)
+      .forall(n => !n.endsWith(".tmp") && !n.endsWith(".tmp.crc")))
+  }
 }

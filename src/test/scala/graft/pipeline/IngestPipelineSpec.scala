@@ -3,6 +3,8 @@ package graft.pipeline
 import graft.SparkSpec
 import graft.schema.PriceIndex
 import java.nio.file.{Files, Path}
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 class IngestPipelineSpec extends SparkSpec {
@@ -44,6 +46,103 @@ class IngestPipelineSpec extends SparkSpec {
       Ingest.readJsonLines(spark, f.toString, "id BIGINT, name STRING, v DOUBLE"),
       maxErrors = 0)
     assert(!strict.ok)
+  }
+
+  test("reconcile returns the clean rows' distinct values of a named " +
+      "column, nulls kept, corrupt rows excluded") {
+    val in = tmpDir("graft_recval")
+    val f = writeCsv(in, "priceindex_v.csv", Seq(header,
+      row("1995-11", "Canada", "food", "1.0"),
+      row("1995-12", "Canada", "food", "2.0"),
+      row("1995-12", "", "food", "3.0"),
+      row("1995-12", "Mars", "food", "4.0") + ",EXTRA,EXTRA"))
+    val rec = Ingest.reconcile(Ingest.readPriceIndexCsv(spark, f),
+      maxErrors = 5, distinctCol = Some("GEO"))
+    try {
+      assert(rec.totalRows == 4 && rec.corruptRows == 1 && rec.ok)
+      // an empty CSV field reads as null
+      assert(rec.cleanValues.toSet == Set("Canada", null))
+      assert(rec.cleanValues.size == 2)
+    } finally rec.release()
+    // no column named: the same counts and no values
+    val plain = Ingest.reconcile(Ingest.readPriceIndexCsv(spark, f),
+      maxErrors = 0)
+    try assert(plain.totalRows == 4 && plain.corruptRows == 1 &&
+      !plain.ok && plain.cleanValues.isEmpty)
+    finally plain.release()
+  }
+
+  /** Spark jobs submitted while `body` runs, counted under a job group
+    * of this test's own so concurrent activity on the shared session is
+    * not counted. A job count does not depend on machine load. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"ingest-shape-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+            js.properties.getProperty("spark.jobGroup.id") == group)
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "ingest job shape")
+    try { body; ListenerBusDrain.drain(sc) }
+    finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
+    n.get
+  }
+
+  test("job shape: a daily load into an existing table is at most 3 " +
+      "jobs, the report export 2, one file per touched GEO dir") {
+    val in = tmpDir("graft_shape_in"); val wh = tmpDir("graft_shape_wh")
+    val p = new IngestPipeline(spark, wh.toString)
+    val history = writeCsv(in, "priceindex_h.csv", Seq(header,
+      row("1995-11", "Canada", "food", "101.5"),
+      row("1995-11", "Ontario", "food", "100.5"),
+      row("1995-11", "01", "food", "99.5"),
+      row("1995-11", "Quebec", "food", "98.5")))
+    assert(p.load(history).status == 1)
+    def parquetFiles(geo: String): Int =
+      new java.io.File(s"$wh/0_priceindex/GEO=$geo").listFiles()
+        .count(_.getName.endsWith(".parquet"))
+    val quebecBefore = new java.io.File(s"$wh/0_priceindex/GEO=Quebec")
+      .listFiles().filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
+    // a daily file: revisions in two existing GEOs, a new month in a
+    // new one, and one malformed row under the tolerance
+    val daily = writeCsv(in, "priceindex_d.csv", Seq(header,
+      row("1995-11", "Canada", "food", "111.5"),
+      row("1995-12", "Canada", "food", "112.5"),
+      row("1995-12", "01", "food", "113.5"),
+      row("1995-12", "Yukon", "food", "114.5"),
+      row("1995-12", "Mars", "food", "1.0") + ",EXTRA,EXTRA"))
+    var r: IngestPipeline.LoadResult = null
+    // the reconcile pass, the merge's exchange, the partitioned write
+    val loadJobs = jobsOf { r = p.load(daily) }
+    assert(r.status == 1, r.error)
+    assert(loadJobs <= 3, s"daily load ran $loadJobs jobs")
+    // the aggregate's exchange and the CSV write
+    val out = tmpDir("graft_shape_rep").resolve("rep").toString
+    val reportJobs = jobsOf {
+      p.buildAndExportReport(1995, 12, Seq.empty, "", out)
+    }
+    assert(reportJobs == 2, s"report export ran $reportJobs jobs")
+    Seq("Canada", "01", "Yukon").foreach(g =>
+      assert(parquetFiles(g) == 1, s"GEO=$g"))
+    // an untouched partition keeps its files
+    assert(new java.io.File(s"$wh/0_priceindex/GEO=Quebec").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet ==
+      quebecBefore)
+    // content, and a GEO that looks numeric reads back as the string
+    // it was loaded as
+    val got = p.permanent()
+      .select($"GEO", $"Date".cast("string"), $"VALUE".cast("double"))
+      .as[(String, String, Double)].collect().toSet
+    assert(got == Set(("Canada", "1995-11-01", 111.5),
+      ("Ontario", "1995-11-01", 100.5), ("01", "1995-11-01", 99.5),
+      ("Quebec", "1995-11-01", 98.5), ("Canada", "1995-12-01", 112.5),
+      ("01", "1995-12-01", 113.5), ("Yukon", "1995-12-01", 114.5)))
+    assert(p.permanent().schema("GEO").dataType ==
+      org.apache.spark.sql.types.StringType)
   }
 
   test("EP1: load -> merge -> report -> archive, with idempotent replay") {

@@ -218,4 +218,56 @@ class MergeSinkSpec extends SparkSpec {
       assert(got() == Set((1L, "a", 1.0, 1L), (2L, "b", 20.0, 2L)))
     } finally q.stop()
   }
+
+  test("cdc sink: an AvailableNow drain with no new input makes no " +
+      "foreachBatch call and submits no job") {
+    val dir = java.nio.file.Files.createTempDirectory("mergesinkdrain").toString
+    val in = new java.io.File(s"$dir/in"); in.mkdirs()
+    val target = s"$dir/table"
+    val ckpt = s"$dir/ckpt"
+    def land(name: String, rows: String*): Unit =
+      java.nio.file.Files.writeString(new java.io.File(in, name).toPath,
+        rows.mkString("\n"))
+    // job groups of every job started while the drains run; the stream
+    // thread tags a micro-batch's jobs with the run id as job group
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null)
+          Option(js.properties.getProperty("spark.jobGroup.id"))
+            .foreach(groups.add)
+    }
+    // (foreachBatch calls, jobs) of one AvailableNow drain
+    def drain(): (Int, Int) = {
+      val calls = new java.util.concurrent.atomic.AtomicInteger()
+      val events = spark.readStream
+        .schema("k BIGINT, part STRING, v DOUBLE, ver BIGINT, op STRING")
+        .json(in.toString)
+      val q = MergeSink.startCdc(events, target, Seq("part", "k"), "part",
+        "ver", "op", ckpt, preBatch = () => { calls.incrementAndGet(); () })
+      q.awaitTermination()
+      ListenerBusDrain.drain(spark.sparkContext)
+      val run = q.runId.toString
+      (calls.get, groups.toArray.count(_ == run))
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      land("b1.json",
+        """{"k": 1, "part": "a", "v": 1.0, "ver": 1, "op": "upsert"}""",
+        """{"k": 2, "part": "b", "v": 2.0, "ver": 1, "op": "upsert"}""")
+      val first = drain()
+      assert(first._1 == 1 && first._2 > 0, first)
+      val epoch = Upsert.manifestedEpoch(spark, target)
+      // restart with nothing new: no batch, no job, no epoch
+      assert(drain() == ((0, 0)))
+      assert(Upsert.manifestedEpoch(spark, target) == epoch)
+      // and new input still drains (the empty drain left no debt)
+      land("b2.json",
+        """{"k": 1, "part": "a", "v": 9.0, "ver": 2, "op": "upsert"}""")
+      assert(drain()._1 == 1)
+      assert(Upsert.readManifested(spark, target)
+        .select($"k", $"v").as[(Long, Double)].collect().toSet ==
+        Set((1L, 9.0), (2L, 2.0)))
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }
