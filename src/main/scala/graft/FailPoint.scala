@@ -14,9 +14,12 @@ package graft
   * injection, which a real process kill would not, and the chaos spec
   * would certify a crash state that cannot occur. Every hit() site
   * must sit OUTSIDE any try/finally block that touches durable state;
-  * current sites (IngestPipeline.load, mergeIntoPartitioned,
-  * scd2MergeManifested, IvfIndex/BqIndex/PqIndex appends via
-  * StagedCommit) honor this — check before adding one. */
+  * the 43 current sites honor this — check before adding one. They
+  * live in IngestPipeline.load (`s0_*`..`s3_*`), the Upsert writers
+  * (`merge_*`, `mergem_*`, `scd2_*`, `manifest_*`), StagedCommit's base
+  * swap (`swap_*`), the index maintenance ops (`ivf_*`, `bq_*`,
+  * `lsh_*`, `bm25_*`, `spans_*`) and the streaming consumers
+  * (`cdf_*`, `idxsink_*`, `mv_*`). */
 object FailPoint {
   @volatile private var armed: String = null
   @volatile private var hook: (String, Runnable) = null

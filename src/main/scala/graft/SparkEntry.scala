@@ -4337,27 +4337,6 @@ object SparkEntry {
       finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
     }),
 
-    "x_stream_ingest_e2e_mv" -> ((s, dir) => {
-      // THE E2E SCENARIO ON THE INCREMENTAL REPORT PATH (VERDICT r15
-      // #6): identical waves, drains, traps, and oracle as
-      // x_stream_ingest_e2e, but every load appends its group-grain
-      // delta under the load's (file, seq) token and each drain's
-      // report export serves from that state instead of rescanning
-      // the permanent table ([report_delta]/[report] stderr lines
-      // attribute the cost). The two report modes are byte-identical
-      // by construction (the state path reproduces avg(VALUE)'s
-      // decimal expression tree), so any divergence — a missed
-      // retraction, a double-applied redelivery delta — hash-
-      // mismatches against the same single-delivery oracle. Separate
-      // gate rather than a flag-flip on the flagship so each keeps its
-      // own floor.
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try graft.pipeline.IngestE2E.run(s, dir,
-        s"${artifactBase(dir)}/ingest_e2e_mv", incrementalReport = true)
-      finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    }),
-
     "x_stream_sample" -> ((s, dir) => {
       // REAL streaming exactly-k sampling: bottom-k of the samplers'
       // md5 coordinate held in distributed bucket state (8×k entries,
@@ -9568,30 +9547,6 @@ object SparkEntry {
     // came through three drains + suppression + quarantine + a CSV
     // round-trip; the oracle computes the same answer in one pass.
     "x_stream_ingest_e2e" ->
-      """WITH nat AS (SELECT n_nationkey AS k, n_name AS geo FROM nation),
-              base AS (
-                SELECT '2024-03-01' AS date, geo, 'All-items' AS products,
-                       CAST(100 + k + 0.5 AS DOUBLE) AS value, k
-                FROM nat
-                UNION ALL
-                SELECT '2024-03-15', geo, 'All-items',
-                       CASE WHEN k % 2 = 0
-                            THEN CAST(200 + k + 0.75 AS DOUBLE)
-                            ELSE CAST(110 + k + 0.25 AS DOUBLE) END, k
-                FROM nat)
-         SELECT 'table' AS kind, date, geo, products,
-                round(value, 6) AS value, CAST(1 AS BIGINT) AS n
-         FROM base
-         UNION ALL
-         SELECT 'report', '2024-03-01', geo, products,
-                round(CAST(avg(value) AS DOUBLE), 6), COUNT(*)
-         FROM base GROUP BY geo, products
-         ORDER BY 1, 3, 2""",
-
-    // the MV variant runs the identical scenario with the report
-    // served from per-load delta state — byte-identical by
-    // construction, so the oracle is the flagship's verbatim
-    "x_stream_ingest_e2e_mv" ->
       """WITH nat AS (SELECT n_nationkey AS k, n_name AS geo FROM nation),
               base AS (
                 SELECT '2024-03-01' AS date, geo, 'All-items' AS products,

@@ -167,11 +167,10 @@ object Upsert {
     * and not yet closed (`validTo` null or > ts). Half-open on the
     * close side, matching [[scd2Merge]]'s convention that a change
     * closes at exactly the update's ts: querying AT the change instant
-    * sees the NEW row. A pure scan-stage filter — at 100 TB, on a
-    * status/date-partitioned history ([[scd2MergeIntoPartitioned]]),
-    * partition pruning plus parquet min/max stats skip everything that
-    * closed before `ts`, so "the dimension as of last quarter" never
-    * reads the deep history. */
+    * sees the NEW row. A pure scan-stage filter, so parquet min/max
+    * stats on the validity columns skip row groups that closed before
+    * `ts`: "the dimension as of last quarter" reads little of the deep
+    * history. */
   def scd2AsOf(hist: DataFrame, ts: org.apache.spark.sql.Column,
                validFrom: String = "valid_from",
                validTo: String = "valid_to"): DataFrame =
@@ -262,42 +261,25 @@ object Upsert {
     * closed append and current write would each replay the full-outer
     * join otherwise. ([[mergeIntoPartitioned]] needs no barrier: its
     * dynamic overwrite swaps partition dirs in only after every task
-    * has read.) Strategy (`spark.graft.merge.staging`, r22 — ADVICE
-    * r21 medium):
+    * has read.)
     *
-    *   - `local`   — eager `localCheckpoint`: no parquet encode +
-    *                 re-list + decode round trip, but the staged slice
-    *                 lives in NON-REPLICATED block-manager storage — an
-    *                 executor lost mid-overwrite makes it
-    *                 unrecomputable and fails the merge, and the slice
-    *                 must fit executor memory+local disk;
-    *   - `durable` — tmp-parquet dir beside the table: survives
-    *                 executor loss and is bounded by storage, at the
-    *                 cost of one extra write+read of the slice;
-    *   - `auto` (default) — `local` under a local[*] master (a single
-    *                 process: executor loss IS driver loss, so the
-    *                 durability gap is empty and the round trip pure
-    *                 overhead — the r21 measurement), `durable` on a
-    *                 real cluster, where a 100 TB merge must not ride
-    *                 on unreplicated checkpoint blocks.
+    *   - `durable = false` — eager `localCheckpoint`: no parquet encode
+    *     + re-list + decode round trip, but the staged slice lives in
+    *     NON-REPLICATED block-manager storage. Under a local[*] master
+    *     executor loss IS driver loss, so that gap is empty and the
+    *     round trip would be pure overhead.
+    *   - `durable = true` — tmp-parquet dir `tmpDir`: survives executor
+    *     loss and is bounded by storage, at the cost of one extra
+    *     write+read of the slice. A cluster merge must not ride on
+    *     unreplicated checkpoint blocks.
     *
-    * Returns the staged frame plus an idempotent cleanup to run in a
-    * `finally` — ON EVERY PATH, so a failed merge leaks neither
-    * checkpoint blocks (ADVICE r21 low: the old happy-path-only
-    * unpersist) nor tmp dirs. */
-  private def stageSlice(spark: org.apache.spark.sql.SparkSession,
-                         df: DataFrame, tmpDir: String)
-      : (DataFrame, () => Unit) = {
-    val mode = spark.conf.getOption("spark.graft.merge.staging")
-      .getOrElse("auto")
-    val useLocal = mode match {
-      case "local" => true
-      case "durable" => false
-      case "auto" => spark.sparkContext.isLocal
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.merge.staging must be local|durable|auto: $other")
-    }
-    if (useLocal) {
+    * Returns the staged frame plus an idempotent cleanup to run ON
+    * EVERY PATH, so a failed merge leaks neither checkpoint blocks nor
+    * tmp dirs. */
+  private[graft] def stageSlice(spark: org.apache.spark.sql.SparkSession,
+                                df: DataFrame, tmpDir: String,
+                                durable: Boolean): (DataFrame, () => Unit) =
+    if (!durable) {
       val staged = df.localCheckpoint(true)
       (staged, () => { staged.unpersist(); () })
     } else {
@@ -307,7 +289,6 @@ object Upsert {
       (spark.read.parquet(tmpDir),
         () => { fs.delete(new org.apache.hadoop.fs.Path(tmpDir), true); () })
     }
-  }
 
   /** Partition-aware merge into a parquet table partitioned on
     * `partitionCol` (which must be a key prefix-compatible column —
@@ -447,73 +428,13 @@ object Upsert {
     }
   }
 
-  /** [[scd2Merge]] against an on-disk history table partitioned by a
-    * `status` column (`current` / `closed`) — the layout that makes
-    * SCD2 viable at scale: a merge READS only the `current` partition
-    * (partition-pruned scan; at 100 TB closed history dwarfs it by
-    * orders of magnitude), APPENDS the newly-closed rows to the
-    * `closed` partition, and dynamically overwrites only the `current`
-    * partition with the new current set. Closed files are never opened,
-    * let alone rewritten.
-    *
-    * NOT atomic (raw parquet, two writes): a crash between the closed
-    * append and the current overwrite leaves a key both closed-at-ts
-    * and still-current, and a blind retry re-appends — recovery is
-    * rebuild from the batch [[scd2Merge]], the same contract as every
-    * raw-parquet append in this repo. First call (no table on disk)
-    * bootstraps all updates as current rows. */
-  def scd2MergeIntoPartitioned(spark: org.apache.spark.sql.SparkSession,
-                               tablePath: String, updates: DataFrame,
-                               keys: Seq[String], attrs: Seq[String],
-                               tsCol: String,
-                               validFrom: String = "valid_from",
-                               validTo: String = "valid_to"): Unit = {
-    import org.apache.spark.sql.SaveMode
-    val p = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) {
-      updates.select(
-        keys.map(col) ++ attrs.map(col) :+ col(tsCol).as(validFrom)
-          :+ lit(null).cast(updates.schema(tsCol).dataType).as(validTo): _*)
-        .withColumn("status", lit("current"))
-        .write.mode(SaveMode.Overwrite).partitionBy("status")
-        .parquet(tablePath)
-      return
-    }
-    val cur = spark.read.parquet(tablePath)
-      .filter(col("status") === "current").drop("status")
-    val merged = scd2Merge(cur, updates, keys, attrs, tsCol,
-      validFrom, validTo)
-    // stage through a temp dir: both writes read the partition they
-    // replace/extend (self-read-overwrite race, see above)
-    val tmp = s"$tablePath._scd2_tmp"
-    merged.write.mode(SaveMode.Overwrite).parquet(tmp)
-    val staged = spark.read.parquet(tmp)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      // closed-append FIRST: a crash then leaves a duplicate (visible,
-      // recoverable) rather than lost history (silent)
-      staged.filter(col(validTo).isNotNull)
-        .withColumn("status", lit("closed"))
-        .write.mode(SaveMode.Append).partitionBy("status").parquet(tablePath)
-      staged.filter(col(validTo).isNull)
-        .withColumn("status", lit("current"))
-        .write.mode(SaveMode.Overwrite).partitionBy("status").parquet(tablePath)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    }
-  }
-
-  /** [[scd2MergeIntoPartitioned]] with ATOMIC reader visibility — the
-    * manifest pattern (VERDICT r12 depth item #3), closing the one
-    * documented non-atomic window left in the repo's artifact story: a
-    * crash between the closed-append and the current-overwrite there
-    * leaves a key both closed-at-ts and still-current until a rebuild.
+  /** [[scd2Merge]] against an on-disk history table, with ATOMIC
+    * reader visibility — the manifest pattern (VERDICT r12 depth item
+    * #3): a merge READS only the current snapshot (closed history
+    * dwarfs it at scale), APPENDS the newly-closed rows, and writes the
+    * new current set; closed files are never opened, let alone
+    * rewritten, and no crash leaves a key both closed-at-ts and
+    * still-current.
     *
     * Layout (a deliberately minimal table format — epoch snapshots +
     * append-only log + one pointer, the Iceberg/Delta idea without the
@@ -542,7 +463,9 @@ object Upsert {
     * Single writer assumed (the repo-wide artifact contract); epoch
     * dirs and manifests OLDER than the immediately-previous epoch are
     * swept best-effort after publish (one epoch is retained so a lazy
-    * reader survives one concurrent merge). */
+    * reader survives one concurrent merge), and so are closed deltas
+    * the new manifest does not list — a killed merge's committed
+    * delta, abandoned when a different batch took its epoch. */
   def scd2MergeManifested(spark: org.apache.spark.sql.SparkSession,
                           tablePath: String, updates: DataFrame,
                           keys: Seq[String], attrs: Seq[String],
@@ -572,12 +495,12 @@ object Upsert {
         val cur = spark.read.parquet(s"$tablePath/current_e$epoch")
         // stage the merge result ONCE: the downstream actions (content
         // token, closed append, current write) would each replay the
-        // full-outer join otherwise. Staging is deployment-gated via
-        // stageSlice (r22, ADVICE r21 medium): localCheckpoint under a
-        // local[*] master (no parquet round trip), durable tmp-parquet
-        // on a cluster (the staged slice must survive executor loss
-        // mid-publish). A crash before publish leaves the table
-        // untouched either way and the retry recomputes. Cleanup runs
+        // full-outer join otherwise. Staging follows the deployment:
+        // localCheckpoint under a local[*] master (no parquet round
+        // trip), durable tmp-parquet on a cluster (the staged slice must
+        // survive executor loss mid-publish). A crash before publish
+        // leaves the table untouched either way and the retry
+        // recomputes. Cleanup runs
         // on success AND on Exception (a failed merge — fence trip,
         // write error — no longer leaks checkpoint blocks, ADVICE r21
         // low) but deliberately NOT on Error: the chaos FailPoints
@@ -594,7 +517,7 @@ object Upsert {
         StagedCommit.refreshLease(fs, qroot, leaseToken)
         val (merged, cleanupStaging) = stageSlice(spark,
           scd2Merge(cur, updates, keys, attrs, tsCol, validFrom, validTo),
-          s"$tablePath/_merge_tmp")
+          s"$tablePath/_merge_tmp", durable = !spark.sparkContext.isLocal)
         try {
         val newClosed = merged.filter(col(validTo).isNotNull)
         // token ties the delta to (epoch, FULL row content — keys,
@@ -633,7 +556,7 @@ object Upsert {
         // concurrent merge to N+1 (zero retention would delete the
         // files under its scan). Older garbage — and a crash here —
         // is swept by the next merge's publish.
-        EpochManifest.sweep(fs, root, epoch)
+        EpochManifest.sweep(fs, root, epoch, (tokens ++ landed).toSet)
         cleanupStaging()
         } catch { case e: Exception => cleanupStaging(); throw e }
     }
@@ -3264,17 +3187,37 @@ object Upsert {
       true
     }
 
-    /** Drop epochs and manifests older than `keep` (best-effort). */
+    /** SCD2 GC (best-effort): drop epochs and manifests older than
+      * `keep`, and every `closed/` delta whose token `listed` (the just-
+      * published manifest's tokens) lacks. Each manifest extends the
+      * previous one's list, so an unlisted delta is visible to no
+      * retained manifest: a merge killed after its closed append whose
+      * epoch a different batch then took. Its files, marker and staging
+      * dir all carry the token; under the writer lease none can belong
+      * to an in-flight append. */
     def sweep(fs: org.apache.hadoop.fs.FileSystem, root: Path,
-              keep: Long): Unit =
-      try fs.listStatus(root).foreach { st =>
-        st.getPath.getName match {
-          case Name(n) if n.toLong < keep => fs.delete(st.getPath, false)
-          case other if other.startsWith("current_e") &&
-              other.stripPrefix("current_e").forall(_.isDigit) &&
-              other.stripPrefix("current_e").toLong < keep =>
+              keep: Long, listed: Set[String]): Unit =
+      try {
+        fs.listStatus(root).foreach { st =>
+          st.getPath.getName match {
+            case Name(n) if n.toLong < keep => fs.delete(st.getPath, false)
+            case other if other.startsWith("current_e") &&
+                other.stripPrefix("current_e").forall(_.isDigit) &&
+                other.stripPrefix("current_e").toLong < keep =>
+              fs.delete(st.getPath, true)
+            case _ => ()
+          }
+        }
+        val closed = new Path(root, "closed")
+        if (fs.exists(closed)) fs.listStatus(closed).foreach { st =>
+          val n = st.getPath.getName
+          val token =
+            if (n.startsWith("_delta_") && n.endsWith("_SUCCESS"))
+              Some(n.stripPrefix("_delta_").stripSuffix("_SUCCESS"))
+            else if (n.startsWith("_stage_")) Some(n.stripPrefix("_stage_"))
+            else StagedCommit.deltaToken(n)
+          if (token.exists(t => !listed.contains(t)))
             fs.delete(st.getPath, true)
-          case _ => ()
         }
       } catch { case _: Throwable => () }
   }

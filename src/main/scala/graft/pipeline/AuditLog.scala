@@ -1,16 +1,14 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** The reference's append-only audit tables `log_for_loading` /
   * `log_for_reporting` (probed via `select status from log_for_loading
   * where locate('temp table creation',EventSource)>0 and
   * timediff(now(),Time_stamp)<10`, `2.2 loading-lambda-for-mysql.py:
   * 273,311,389`), re-expressed as an append-only audit dir the engine
-  * writes one tiny row-file per pipeline stage (driver-side creates —
-  * no Spark job for a one-row record; legacy parquet row-files from
-  * earlier rounds read back through the same probe surface).
+  * writes one tiny TSV row-file per pipeline stage (driver-side
+  * creates — no Spark job for a one-row record).
   *
   * Columns: (event_source, target, status, ts). `status` carries the
   * reference's {-1,0,1} OUT-param protocol (§2.10).
@@ -30,9 +28,7 @@ final class AuditLog(spark: SparkSession, path: String,
   // across three drains, so the audit path alone owned 15-20 of the
   // gate's ~100 jobs. Each append is now one atomic create of a tiny
   // escaped-TSV file — O(stages) driver-side metadata, the shape the
-  // class doc always claimed. Readers keep a parquet path for files
-  // older appends left behind (artifact dirs restored from earlier
-  // rounds), so the two encodings coexist in one dir.
+  // class doc always claimed.
   // synchronized: loads run on a driver thread pool (Watch); the
   // counter + create(…, overwrite=false) pair keeps names unique.
   // VISIBILITY: the row is written under a hidden temp name (a dot
@@ -87,9 +83,9 @@ final class AuditLog(spark: SparkSession, path: String,
     def tsSec: Long = Math.floorDiv(tsMillis, 1000L)
   }
 
-  /** Per-file row memo behind the control-plane probes: audit part
-    * files are WRITE-ONCE (append-mode parquet adds files, never
-    * rewrites one), so path-keyed rows can never go stale — but an
+  /** Per-file row memo behind the control-plane probes: audit row
+    * files are WRITE-ONCE ([[append]] adds files, never rewrites
+    * one), so path-keyed rows can never go stale — but an
     * EMPTY parse is never memoized: every file this class writes holds
     * one row, so an empty parse is a file not yet fully visible (a
     * torn or in-flight write, or an older writer that created names in
@@ -98,9 +94,7 @@ final class AuditLog(spark: SparkSession, path: String,
     * scale. Every probe previously paid a full Spark job over KB-sized
     * files; at three e2e drains × several probes each, the job
     * OVERHEAD (scheduler, not IO) owned 1.5–2 s of the suite's largest
-    * gate. Uncached files load in ONE batched read attributed by
-    * input_file_name; keys normalize to the URI path component so the
-    * listing's and the scan's spellings of the same file agree. */
+    * gate. Uncached files parse on the driver, no job. */
   private val fileRowsCache =
     scala.collection.concurrent.TrieMap.empty[String, Seq[AuditRow]]
 
@@ -122,58 +116,22 @@ final class AuditLog(spark: SparkSession, path: String,
     }
   }
 
-  private def rowsOf(files: Seq[org.apache.hadoop.fs.Path]): Seq[AuditRow] = {
-    val keyed = files.map(f => pathKey(f) -> f)
-    val missing = keyed.filterNot { case (k, _) => fileRowsCache.contains(k) }
-    val (missingTsv, missingPq) =
-      missing.partition(_._2.getName.endsWith(".tsv"))
-    // driver-side rows parse driver-side (no job); legacy parquet files
-    // keep the one batched Spark read
-    val loadedTsv: Map[String, Seq[AuditRow]] =
-      missingTsv.map { case (k, f) => k -> parseTsv(f) }.toMap
-    val loaded: Map[String, Seq[AuditRow]] = loadedTsv ++ (
-      if (missingPq.isEmpty) Map.empty[String, Seq[AuditRow]]
-      else spark.read.parquet(missingPq.map(_._2.toString): _*)
-        .select(input_file_name().as("_f"), col("event_source"),
-          col("target"), col("status"),
-          expr("unix_micros(ts) DIV 1000").as("_ms"))
-        .collect().toSeq
-        .groupBy(r => pathKey(new org.apache.hadoop.fs.Path(r.getString(0))))
-        .map { case (k, rs) => k -> rs.map(r => AuditRow(
-          r.getString(1), r.getString(2), r.getInt(3), r.getLong(4))) })
-    // GUARD before caching: caching `empty` for a requested key is only
-    // sound when the scan's file-name spelling provably matches the
-    // listing's (both normalize through pathKey, but a filesystem whose
-    // input_file_name URIs decode differently would otherwise pin a
-    // file's rows INVISIBLE forever — a wrong-answer failure, not a
-    // slow one). Any unexplained key from the scan disables caching
-    // for this batch; rows are still served from the scan, so a
-    // mismatch degrades to per-probe reads, never to lost rows.
-    val requested = missing.map(_._1).toSet
-    if (loaded.keys.forall(requested.contains)) {
-      missing.foreach { case (k, _) =>
-        loaded.get(k).filter(_.nonEmpty)
-          .foreach(rows => fileRowsCache.putIfAbsent(k, rows))
-      }
-      keyed.flatMap { case (k, _) =>
-        fileRowsCache.get(k).orElse(loaded.get(k)).getOrElse(Seq.empty)
-      }
-    } else {
-      // mismatch path: the scan read exactly the missing files, so its
-      // rows — whatever keys they surfaced under — ARE those files'
-      // rows; serve them verbatim alongside the cached remainder
-      keyed.flatMap { case (k, _) => fileRowsCache.getOrElse(k, Seq.empty) } ++
-        loaded.values.flatten.toSeq
+  private def rowsOf(files: Seq[org.apache.hadoop.fs.Path]): Seq[AuditRow] =
+    files.flatMap { f =>
+      val k = pathKey(f)
+      fileRowsCache.getOrElse(k, {
+        val rows = parseTsv(f)
+        if (rows.nonEmpty) fileRowsCache.putIfAbsent(k, rows)
+        rows
+      })
     }
-  }
 
   private def listAudit(): Seq[org.apache.hadoop.fs.FileStatus] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq
-      .filter(st => st.isFile && (st.getPath.getName.endsWith(".parquet") ||
-        st.getPath.getName.endsWith(".tsv")))
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".tsv"))
   }
 
   /** Time-bounded view for window probes: every [[append]] creates a

@@ -42,14 +42,7 @@ import org.apache.spark.sql.functions._
   */
 object IngestE2E {
 
-  /** `incrementalReport` (VERDICT r15 #6) switches the report exports
-    * to the per-load delta state ([[IngestPipeline.appendReportDelta]])
-    * — same scenario, same oracle (the two report modes are
-    * byte-identical by construction), so the MV variant gate proves
-    * the incremental path end to end under redelivery without moving
-    * the flagship gate's floor. */
-  def run(spark: SparkSession, sfDir: String, workDir: String,
-          incrementalReport: Boolean = false): DataFrame = {
+  def run(spark: SparkSession, sfDir: String, workDir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
     val work = Paths.get(workDir)
     // from-scratch build per invocation: leftover audit/checkpoint state
@@ -92,8 +85,7 @@ object IngestE2E {
       onAllLoaded = () => {
         pipelineRef.buildAndExportReport(2024, 3, Seq.empty, "", reportDir)
         ()
-      },
-      incrementalReport = incrementalReport)
+      })
     pipelineRef = watch.pipeline
 
     // per-drain wall-clock to stderr: this gate's 7-10 s budget is
@@ -118,11 +110,6 @@ object IngestE2E {
       case (k, geo) if k % 2 == 0 =>
         row("2024-03-15", geo, k, s"${200 + k}.75") }.toSeq)
     drain("cp2") // redelivery: A suppressed; C merges; poison quarantined
-    // mid-pipeline state compaction on the MV variant: drain 3's
-    // report must serve identically from the compacted snapshot, and
-    // the redelivered loads must still fence on their kept markers —
-    // a wrong compact hash-mismatches the oracle
-    if (incrementalReport) pipelineRef.compactReportState()
     drain("cp3") // full redelivery: nothing may change
 
     // ST5/EP3: the completion path exported the report after each drain

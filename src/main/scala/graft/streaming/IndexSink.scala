@@ -177,8 +177,8 @@ object IndexSink {
     * after the batch marker lands, registering this consumer with
     * [[CdfSource.pruneFeed]]'s retention clamp exactly like the MV
     * sink. `compactEvery` — invoke the family's compact after every N
-    * applied batches (0 = never): the `reportCompactEvery` pattern,
-    * bounding delta-file growth on a long-running tail. The compact
+    * applied batches (0 = never), bounding delta-file growth on a
+    * long-running tail. The compact
     * runs AFTER the batch marker (pure maintenance — a kill inside it
     * never loses a batch; flat and partitioned folds alike roll
     * forward from the [[graft.operators.StagedCommit.swapBase]] /

@@ -6,56 +6,20 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming upsert sink — the production pattern for "a stream of
   * row versions maintains a keyed table": `foreachBatch` turns each
-  * micro-batch into one [[Upsert.mergeLatest]] against the parquet
-  * target, so the reference's load-upsert core
-  * (`2.2 loading-lambda-for-mysql.py:640-700` — staged batch merged
-  * into the serving table per file) runs against a live stream with
-  * the SAME merge operator the batch pipeline uses.
+  * micro-batch into one commit against the manifested table
+  * ([[Upsert.mergeIntoManifested]] / [[Upsert.deleteKeysFromManifested]]),
+  * so the reference's load-upsert core (`2.2
+  * loading-lambda-for-mysql.py:640-700` — staged batch merged into the
+  * serving table per file) runs against a live stream.
   *
-  * Semantics: within a micro-batch the latest `versionCol` per key
-  * wins (mergeLatest pre-dedup); across batches later merges overwrite
-  * earlier ones — replaying the same batch is idempotent, so the sink
-  * is effectively-once on top of foreachBatch's at-least-once
-  * contract.
-  *
-  * Scale shape: each micro-batch pays one mergeLatest (existing ⟕
-  * batch full-outer on the key) plus a snapshot rewrite. At real
-  * scale the rewrite step is [[Upsert.mergeIntoPartitioned]] against
-  * a partitioned table (only touched partitions rewrite); the
-  * snapshot form here keeps the demonstration self-contained. The
-  * `localCheckpoint` before the overwrite breaks lineage so the new
-  * snapshot does not read the files it is replacing mid-write.
+  * Only the batch's touched partitions are read and rewritten (manifest
+  * dir-level pruning), and a concurrent reader flips atomically between
+  * published snapshots: a crash MID-commit leaves the table serving the
+  * previous manifest, not a half-written directory. Max-version-wins
+  * makes a replayed micro-batch a no-op in content, so the sink is
+  * effectively-once on top of foreachBatch's at-least-once contract.
   */
 object MergeSink {
-
-  /** The scale form of [[start]]: each micro-batch lands via
-    * [[Upsert.mergeIntoManifested]] — only the batch's touched
-    * partitions are read and rewritten (manifest dir-level pruning),
-    * and a concurrent reader flips atomically between published
-    * snapshots instead of racing a directory overwrite. Max-version-
-    * wins makes a replayed micro-batch a no-op in content, so the sink
-    * stays effectively-once on foreachBatch's at-least-once contract —
-    * and unlike the snapshot form, a crash MID-merge leaves the table
-    * serving the previous manifest, not a half-written directory.
-    * Empty micro-batches are skipped (a merge would publish a new,
-    * identical epoch for nothing). */
-  def startManifested(updates: DataFrame, targetDir: String,
-                      keys: Seq[String], partitionCol: String,
-                      versionCol: String, checkpointDir: String,
-                      trigger: Trigger = Trigger.AvailableNow())
-      : StreamingQuery = {
-    require(keys.nonEmpty, "merge sink needs at least one key column")
-    val spark = updates.sparkSession
-    updates.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          Upsert.mergeIntoManifested(spark, targetDir, batch, keys,
-            partitionCol, versionCol)
-      }
-      .start()
-  }
 
   /** CDC APPLY — the Debezium-shaped ingestion path: a stream of
     * change events carrying an op column (`"delete"` vs any other
@@ -133,33 +97,6 @@ object MergeSink {
           Upsert.deleteKeysFromManifestedTouched(spark, targetDir,
             latest.filter(isDelete).select(keys.map(col): _*),
             keys, partitionCol, retain = 2, touched = Some(deleteParts))
-      }
-      .start()
-  }
-
-  def start(updates: DataFrame, targetDir: String, keys: Seq[String],
-            versionCol: String, checkpointDir: String,
-            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    require(keys.nonEmpty, "merge sink needs at least one key column")
-    val spark = updates.sparkSession
-    updates.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          spark.sparkContext.hadoopConfiguration)
-        val path = new org.apache.hadoop.fs.Path(targetDir)
-        val existing =
-          if (fs.exists(path)) spark.read.parquet(targetDir)
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            batch.schema)
-        val merged = Upsert
-          .mergeLatest(existing, batch, keys, versionCol)
-          // materialize BEFORE overwriting the directory being read
-          .localCheckpoint(true)
-        merged.write.mode("overwrite").parquet(targetDir)
-        ()
       }
       .start()
   }

@@ -39,14 +39,12 @@ final class Watch(spark: SparkSession, watchDir: String, warehouse: String,
                   freshnessMinutes: Long = 30,
                   onAllLoaded: () => Unit = () => (),
                   loadParallelism: Int = 4,
-                  notifier: Notifier = Notifier.noop,
-                  incrementalReport: Boolean = false) {
+                  notifier: Notifier = Notifier.noop) {
   require(!watchDir.startsWith(warehouse) && !warehouse.startsWith(watchDir),
     "ST8: watch dir and warehouse must be disjoint")
   require(loadParallelism >= 1, "loadParallelism must be >= 1")
 
-  val pipeline = new IngestPipeline(spark, warehouse, notifier = notifier,
-    incrementalReport = incrementalReport)
+  val pipeline = new IngestPipeline(spark, warehouse, notifier = notifier)
   private val attempts = scala.collection.mutable.Map.empty[String, Int]
 
   /** Start the watch. `Trigger.AvailableNow` drains the backlog and stops

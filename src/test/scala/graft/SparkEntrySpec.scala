@@ -16,6 +16,23 @@ class SparkEntrySpec extends SparkSpec {
     assert(q.subsetOf(o), s"queries without oracle: ${(q -- o).toSeq.sorted}")
   }
 
+  test("every gate named in FLOORS.json and FLOORS_ISO.json is a query") {
+    val q = SparkEntry.queries.keySet
+    Seq("FLOORS.json", "FLOORS_ISO.json").foreach { f =>
+      val txt = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(f)), java.nio.charset.StandardCharsets.UTF_8)
+      val at = txt.indexOf("\"_provenance\"")
+      assert(at > 0, s"$f has no _provenance map")
+      def keys(part: String) = """"([A-Za-z0-9_]+)"\s*:""".r
+        .findAllMatchIn(part).map(_.group(1)).toSet - "_provenance"
+      val (numbers, provenance) = (keys(txt.take(at)), keys(txt.drop(at)))
+      assert(numbers.nonEmpty && provenance.nonEmpty, s"$f parsed empty")
+      assert(numbers.subsetOf(q), s"$f orphan floors: ${(numbers -- q).toSeq.sorted}")
+      assert(provenance.subsetOf(q),
+        s"$f orphan provenance: ${(provenance -- q).toSeq.sorted}")
+    }
+  }
+
   test("oracle SQL references only path tokens Verify resolves") {
     val known = Set("__GRAFT_IVF__", "__GRAFT_SIMHASH__", "__GRAFT_MEDIA__",
       "__GRAFT_LSH__", "__GRAFT_PQ__", "__GRAFT_IVFPQ__", "__GRAFT_CMS__")

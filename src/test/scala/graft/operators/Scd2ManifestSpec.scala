@@ -5,9 +5,8 @@ import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 
 /** The manifest-published SCD2 table: atomic reader visibility across
-  * the closed-append + current-overwrite pair that the dynamic-
-  * partition layout leaves non-atomic (its documented contract), plus
-  * crash/replay convergence at both kill points. */
+  * the closed-append + current-write pair, crash/replay convergence at
+  * both kill points, and no debris left by an abandoned merge. */
 class Scd2ManifestSpec extends SparkSpec {
   import spark.implicits._
 
@@ -33,6 +32,11 @@ class Scd2ManifestSpec extends SparkSpec {
       .as[(Long, String, Timestamp, Option[Timestamp])].collect().toSet
   }
 
+  /** Names of the data files under `closed/`. */
+  private def closedFiles(path: String): Set[String] =
+    Option(new java.io.File(s"$path/closed").listFiles()).toSeq.flatten
+      .map(_.getName).filter(_.endsWith(".parquet")).toSet
+
   test("merge sequence equals the batch scd2Merge; status column sane") {
     val path = java.nio.file.Files.createTempDirectory("graft_scd2m")
       .toString + "/hist"
@@ -41,8 +45,15 @@ class Scd2ManifestSpec extends SparkSpec {
       Seq("k"), Seq("attr"), "ts")
     Upsert.scd2MergeManifested(spark, path, upd((1L, "A2", t2)),
       Seq("k"), Seq("attr"), "ts")
+    val afterFirst = closedFiles(path)
+    assert(afterFirst.nonEmpty)
     Upsert.scd2MergeManifested(spark, path, upd((2L, "B2", t3)),
       Seq("k"), Seq("attr"), "ts")
+    // closed history files survive BY NAME: the second change appended
+    // its own closed files and never rewrote the first's
+    val afterSecond = closedFiles(path)
+    assert(afterFirst.subsetOf(afterSecond) &&
+      afterSecond.size > afterFirst.size)
     assert(read(path) == batchTwice)
     val st = Upsert.scd2ReadManifested(spark, path)
       .groupBy($"status").count().as[(String, Long)].collect().toMap
@@ -62,8 +73,8 @@ class Scd2ManifestSpec extends SparkSpec {
       Upsert.scd2MergeManifested(spark, path, upd((1L, "A2", t2)),
         Seq("k"), Seq("attr"), "ts")
     } finally graft.FailPoint.disarm()
-    // the committed-but-unlisted closed delta is INVISIBLE: this is
-    // exactly the torn state the dynamic-partition layout exposes
+    // the committed-but-unlisted closed delta is INVISIBLE: readers
+    // never see a key both closed-at-ts and still-current
     assert(read(path) == before)
     // retry IS the recovery; the replayed delta deduplicates by token
     Upsert.scd2MergeManifested(spark, path, upd((1L, "A2", t2)),
@@ -92,6 +103,47 @@ class Scd2ManifestSpec extends SparkSpec {
     Upsert.scd2MergeManifested(spark, path, upd((2L, "B2", t3)),
       Seq("k"), Seq("attr"), "ts")
     assert(read(path) == batchTwice)
+  }
+
+  test("a kill at either scd2 site, then a DIFFERENT batch at the " +
+      "same epoch: model answer and no leftover debris") {
+    for (site <- Seq("scd2_after_closed_append", "scd2_after_current_write")) {
+      val path = java.nio.file.Files.createTempDirectory("graft_scd2kd")
+        .toString + "/hist"
+      Upsert.scd2MergeManifested(spark, path,
+        upd((1L, "A", t1), (2L, "B", t1), (3L, "C", t1)),
+        Seq("k"), Seq("attr"), "ts")
+      graft.FailPoint.arm(site)
+      try intercept[graft.FailPoint.Kill] {
+        Upsert.scd2MergeManifested(spark, path, upd((3L, "C9", t2)),
+          Seq("k"), Seq("attr"), "ts")
+      } finally graft.FailPoint.disarm()
+      // the killed batch is never redelivered: two other batches take
+      // epochs 1 and 2, the same pair the model folds
+      Upsert.scd2MergeManifested(spark, path, upd((1L, "A2", t2)),
+        Seq("k"), Seq("attr"), "ts")
+      Upsert.scd2MergeManifested(spark, path, upd((2L, "B2", t3)),
+        Seq("k"), Seq("attr"), "ts")
+      assert(read(path) == batchTwice, site)
+      // debris: every closed delta, marker and staging dir on disk
+      // belongs to a token the active manifest lists, and the only
+      // current_e dirs are the active epoch and the one retained
+      val root = new org.apache.hadoop.fs.Path(path)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val (epoch, tokens) = Upsert.EpochManifest.active(fs, root).get
+      val onDisk = new java.io.File(s"$path/closed").listFiles().toSeq
+        .map(_.getName).filter(n => n.startsWith("delta_") ||
+          n.startsWith("_delta_") || n.startsWith("_stage_"))
+      assert(onDisk.nonEmpty, site)
+      val unlisted = onDisk.filterNot(n => tokens.exists(t =>
+        n == s"_delta_${t}_SUCCESS" || n == s"_stage_$t" ||
+          StagedCommit.deltaToken(n).contains(t)))
+      assert(unlisted.isEmpty, s"$site: unlisted closed files $unlisted")
+      val currents = new java.io.File(path).listFiles().toSeq
+        .map(_.getName).filter(_.startsWith("current_e")).toSet
+      assert(currents == Set(s"current_e$epoch", s"current_e${epoch - 1}"),
+        s"$site: $currents")
+    }
   }
 
   test("concurrent reader during a merge stream only ever sees " +

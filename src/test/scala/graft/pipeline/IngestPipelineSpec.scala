@@ -197,132 +197,6 @@ class IngestPipelineSpec extends SparkSpec {
     assert(audit.filter($"event_source" === "loading" && $"status" === 1).count() >= 2)
   }
 
-  test("incremental report state equals the scan-path report through " +
-      "insert, update, and redelivery (VERDICT r15 #6)") {
-    val in = tmpDir("graft_in_ir"); val wh = tmpDir("graft_wh_ir")
-    // dedup window 0: redeliveries reach the merge, so the (file, seq)
-    // delta token — not suppression — must keep the state exactly-once
-    val p = new IngestPipeline(spark, wh.toString, dedupWindowSeconds = 0,
-      incrementalReport = true)
-    // a scan-path facade over the SAME warehouse is the equality oracle
-    val scan = new IngestPipeline(spark, wh.toString)
-    var repN = 0
-    def norm(pp: IngestPipeline): Set[(Int, Int, String, String, Double, Long)] = {
-      repN += 1
-      val o = tmpDir("graft_rep_ir").resolve(s"r$repN").toString
-      pp.buildAndExportReport(1995, 12, Seq.empty, "", o)
-        .select($"y", $"m", $"geo", $"category",
-          round($"avg_value".cast("double"), 6).as("a"), $"n")
-        .as[(Int, Int, String, String, Double, Long)].collect().toSet
-    }
-    val f1 = writeCsv(in, "priceindex_ir_a.csv", Seq(header,
-      row("1995-12-01", "Canada", "food", "101.5"),
-      row("1995-12-15", "Canada", "food", "104.3"),
-      row("1995-12-01", "Ontario", "food", "103.9")))
-    assert(p.load(f1).status == 1)
-    assert(norm(p) == norm(scan) && norm(p).nonEmpty)
-    // update one key, insert another: the delta retracts the pre-image
-    val f2 = writeCsv(in, "priceindex_ir_b.csv", Seq(header,
-      row("1995-12-01", "Ontario", "food", "999.9"),
-      row("1995-12-01", "Quebec", "food", "102.2")))
-    assert(p.load(f2).status == 1)
-    val afterUpdate = norm(p)
-    assert(afterUpdate == norm(scan))
-    assert(afterUpdate.exists(r => r._3 == "Ontario" && r._5 == 999.9))
-    // redelivery of the SAME file reaches the merge (window 0); the
-    // content-stable token makes the recomputed delta a no-op
-    assert(p.load(f2).status == 1)
-    assert(norm(p) == afterUpdate)
-    // COMPACTION: both load deltas fold into one snapshot, answer
-    // unchanged; compacting a single live token is a no-op
-    assert(p.compactReportState() == 2)
-    assert(norm(p) == afterUpdate)
-    assert(p.compactReportState() == 0)
-    // a redelivery AFTER compaction still fences: the covered tokens'
-    // markers survive the sweep exactly so this no-ops
-    assert(p.load(f2).status == 1)
-    assert(norm(p) == afterUpdate)
-    // and new deltas compose with the compact (compacts are
-    // themselves compactable)
-    val f3 = writeCsv(in, "priceindex_ir_c.csv", Seq(header,
-      row("1995-12-01", "Quebec", "food", "555.5")))
-    assert(p.load(f3).status == 1)
-    assert(norm(p) == norm(scan))
-    assert(p.compactReportState() == 2)
-    assert(norm(p) == norm(scan))
-  }
-
-  test("incremental report crash windows (chaos): a kill between the " +
-      "delta append and the merge, and one after the merge, both " +
-      "converge on redelivery — the delta lands exactly once") {
-    val in = tmpDir("graft_in_cw"); val wh = tmpDir("graft_wh_cw")
-    val p = new IngestPipeline(spark, wh.toString, dedupWindowSeconds = 0,
-      incrementalReport = true)
-    val scan = new IngestPipeline(spark, wh.toString)
-    var repN = 0
-    def norm(pp: IngestPipeline): Set[(String, Double, Long)] = {
-      repN += 1
-      val o = tmpDir("graft_rep_cw").resolve(s"r$repN").toString
-      pp.buildAndExportReport(1995, 12, Seq.empty, "", o)
-        .select($"geo", round($"avg_value".cast("double"), 6), $"n")
-        .as[(String, Double, Long)].collect().toSet
-    }
-    val f1 = writeCsv(in, "priceindex_cw_a.csv", Seq(header,
-      row("1995-12-01", "Canada", "food", "101.5"),
-      row("1995-12-01", "Ontario", "food", "103.9")))
-    assert(p.load(f1).status == 1)
-    // WINDOW 1: delta committed, merge never ran — the documented
-    // "retry before its merge recomputes the identical delta" case
-    val f2 = writeCsv(in, "priceindex_cw_b.csv", Seq(header,
-      row("1995-12-01", "Ontario", "food", "999.9")))
-    graft.FailPoint.arm("s3_after_report_delta")
-    try intercept[graft.FailPoint.Kill] { p.load(f2) }
-    finally graft.FailPoint.disarm()
-    assert(p.load(f2).status == 1) // redelivery lands the merge
-    assert(norm(p) == norm(scan))
-    // WINDOW 2: merge landed, crash before the terminal audit row —
-    // the retry sees pre == post, but the first committed delta holds
-    // the truth and the (file, seq) marker no-ops the recompute
-    val f3 = writeCsv(in, "priceindex_cw_c.csv", Seq(header,
-      row("1995-12-01", "Quebec", "food", "555.5")))
-    graft.FailPoint.arm("s3_after_merge")
-    try intercept[graft.FailPoint.Kill] { p.load(f3) }
-    finally graft.FailPoint.disarm()
-    assert(p.load(f3).status == 1)
-    val fin = norm(p)
-    assert(fin == norm(scan))
-    assert(fin.exists(r => r._1 == "Quebec" && r._2 == 555.5 && r._3 == 1L))
-  }
-
-  test("auto-compaction keeps the incremental report state bounded " +
-      "(reportCompactEvery) without changing the answer") {
-    val in = tmpDir("graft_in_ac"); val wh = tmpDir("graft_wh_ac")
-    val p = new IngestPipeline(spark, wh.toString, dedupWindowSeconds = 0,
-      incrementalReport = true, reportCompactEvery = 2)
-    val scan = new IngestPipeline(spark, wh.toString)
-    (1 to 4).foreach { i =>
-      val f = writeCsv(in, s"priceindex_ac_$i.csv", Seq(header,
-        row("1995-12-01", "Canada", s"prod$i", s"10$i.5")))
-      assert(p.load(f).status == 1)
-    }
-    // every load past the knob folds the state back: live DATA files
-    // stay bounded (covered files sweep; only markers accumulate)
-    val sp = new org.apache.hadoop.fs.Path(s"$wh/report_state")
-    val fs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = fs.listStatus(sp).count(st => st.isFile &&
-      st.getPath.getName.startsWith("delta_") &&
-      st.getPath.getName.endsWith(".parquet"))
-    assert(live <= 2, s"state not bounded: $live live data files")
-    // and the folded state still answers exactly like the scan path
-    val o1 = tmpDir("graft_rep_ac").resolve("i").toString
-    val o2 = tmpDir("graft_rep_ac").resolve("s").toString
-    def norm(df: org.apache.spark.sql.DataFrame) =
-      df.select($"category", round($"avg_value".cast("double"), 6), $"n")
-        .as[(String, Double, Long)].collect().toSet
-    assert(norm(p.buildAndExportReport(1995, 12, Seq.empty, "", o1)) ==
-      norm(scan.buildAndExportReport(1995, 12, Seq.empty, "", o2)))
-  }
-
   test("corrupt rows within maxerrors are tolerated; beyond it fail the load") {
     val in = tmpDir("graft_in2"); val wh = tmpDir("graft_wh2")
     val p = new IngestPipeline(spark, wh.toString, maxErrors = 1)

@@ -11,38 +11,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
 class MergeSinkSpec extends SparkSpec {
   import spark.implicits._
 
-  test("streaming merges equal one batch merge of all updates") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("mergesink").toString
-    val target = s"$dir/table"
-    val mem = MemoryStream[(Long, String, Long)]
-    val updates = mem.toDF().toDF("k", "v", "ver")
-    val q = MergeSink.start(updates, target, Seq("k"), "ver",
-      s"$dir/ckpt",
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
-    try {
-      // batch 1 creates the table; in-batch dup on k=1: latest ver wins
-      mem.addData((1L, "a0", 1L), (1L, "a1", 2L), (2L, "b0", 1L))
-      q.processAllAvailable()
-      assert(spark.read.parquet(target).count() == 2)
-      assert(spark.read.parquet(target).filter($"k" === 1)
-        .select("v").as[String].head() == "a1")
-      // batch 2 updates k=2, inserts k=3
-      mem.addData((2L, "b1", 5L), (3L, "c0", 1L))
-      q.processAllAvailable()
-      val fin = spark.read.parquet(target)
-        .orderBy("k").as[(Long, String, Long)].collect().toSeq
-      assert(fin == Seq((1L, "a1", 2L), (2L, "b1", 5L), (3L, "c0", 1L)))
-      // equivalence: the same updates as ONE batch merge into empty
-      val all = Seq((1L, "a0", 1L), (1L, "a1", 2L), (2L, "b0", 1L),
-        (2L, "b1", 5L), (3L, "c0", 1L)).toDF("k", "v", "ver")
-      val empty = all.filter(lit(false))
-      val oneShot = Upsert.mergeLatest(empty, all, Seq("k"), "ver")
-        .orderBy("k").as[(Long, String, Long)].collect().toSeq
-      assert(oneShot == fin)
-    } finally q.stop()
-  }
-
   test("cdc sink: net effect per key within a batch, deletes remove " +
       "keys, a later upsert re-inserts, replay is a content no-op") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -89,36 +57,43 @@ class MergeSinkSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("manifested sink: partition-pruned reader-atomic merges equal " +
-      "the order-free max-version model; replay is a content no-op") {
+  test("cdc sink, upserts only: in-batch dups, untouched dirs, replay") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("mergesinkm").toString
+    val dir = java.nio.file.Files.createTempDirectory("mergesinkups").toString
     val target = s"$dir/table"
-    val mem = MemoryStream[(Long, String, Double, Long)]
-    val updates = mem.toDF().toDF("k", "part", "v", "ver")
-    val q = MergeSink.startManifested(updates, target, Seq("part", "k"),
-      "part", "ver", s"$dir/ckpt",
+    val mem = MemoryStream[(Long, String, Double, Long, String)]
+    val events = mem.toDF().toDF("k", "part", "v", "ver", "op")
+    val q = MergeSink.startCdc(events, target, Seq("part", "k"),
+      "part", "ver", "op", s"$dir/ckpt",
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
-    try {
-      mem.addData((1L, "a", 1.0, 1L), (2L, "a", 2.0, 1L), (3L, "b", 3.0, 1L))
-      q.processAllAvailable()
-      // batch 2 touches only partition a; b's snapshot dir is reused
-      mem.addData((1L, "a", 10.0, 2L), (4L, "c", 4.0, 1L))
-      q.processAllAvailable()
-      val got = Upsert.readManifested(spark, target)
+    def got(): Set[(Long, String, Double, Long)] =
+      Upsert.readManifested(spark, target)
         .select($"k", $"part", $"v", $"ver")
         .as[(Long, String, Double, Long)].collect().toSet
-      assert(got == Set((1L, "a", 10.0, 2L), (2L, "a", 2.0, 1L),
-        (3L, "b", 3.0, 1L), (4L, "c", 4.0, 1L)))
-      val fs = new org.apache.hadoop.fs.Path(target)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      assert(fs.exists(new org.apache.hadoop.fs.Path(s"$target/_e0/part=b")))
-      // replay (at-least-once delivery): content unchanged
-      mem.addData((1L, "a", 10.0, 2L), (4L, "c", 4.0, 1L))
+    try {
+      // in-batch duplicate on k=1: the latest version wins
+      mem.addData((1L, "a", 0.5, 1L, "upsert"), (1L, "a", 1.0, 2L, "upsert"),
+        (2L, "a", 2.0, 1L, "upsert"), (3L, "b", 3.0, 1L, "upsert"))
       q.processAllAvailable()
-      assert(Upsert.readManifested(spark, target)
-        .select($"k", $"part", $"v", $"ver")
-        .as[(Long, String, Double, Long)].collect().toSet == got)
+      assert(got() == Set((1L, "a", 1.0, 2L), (2L, "a", 2.0, 1L),
+        (3L, "b", 3.0, 1L)))
+      // batch 2 touches partitions a and c only: b is still served
+      // from the first epoch's snapshot dir
+      val b2 = Seq((1L, "a", 10.0, 3L, "upsert"), (4L, "c", 4.0, 1L, "upsert"))
+      mem.addData(b2: _*)
+      q.processAllAvailable()
+      val afterB2 = Set((1L, "a", 10.0, 3L), (2L, "a", 2.0, 1L),
+        (3L, "b", 3.0, 1L), (4L, "c", 4.0, 1L))
+      assert(got() == afterB2)
+      val root = new org.apache.hadoop.fs.Path(target)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val live = Upsert.EpochManifest.active(fs, root).get._2
+      assert(live.contains("part=b\t0"), live)
+      assert(new java.io.File(s"$target/_e0/part=b").isDirectory)
+      // replay (at-least-once delivery): content unchanged
+      mem.addData(b2: _*)
+      q.processAllAvailable()
+      assert(got() == afterB2)
     } finally q.stop()
   }
 
