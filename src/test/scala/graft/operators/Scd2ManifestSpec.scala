@@ -32,11 +32,6 @@ class Scd2ManifestSpec extends SparkSpec {
       .as[(Long, String, Timestamp, Option[Timestamp])].collect().toSet
   }
 
-  /** Names of the data files under `closed/`. */
-  private def closedFiles(path: String): Set[String] =
-    Option(new java.io.File(s"$path/closed").listFiles()).toSeq.flatten
-      .map(_.getName).filter(_.endsWith(".parquet")).toSet
-
   test("merge sequence equals the batch scd2Merge; status column sane") {
     val path = java.nio.file.Files.createTempDirectory("graft_scd2m")
       .toString + "/hist"
@@ -45,15 +40,8 @@ class Scd2ManifestSpec extends SparkSpec {
       Seq("k"), Seq("attr"), "ts")
     Upsert.scd2MergeManifested(spark, path, upd((1L, "A2", t2)),
       Seq("k"), Seq("attr"), "ts")
-    val afterFirst = closedFiles(path)
-    assert(afterFirst.nonEmpty)
     Upsert.scd2MergeManifested(spark, path, upd((2L, "B2", t3)),
       Seq("k"), Seq("attr"), "ts")
-    // closed history files survive BY NAME: the second change appended
-    // its own closed files and never rewrote the first's
-    val afterSecond = closedFiles(path)
-    assert(afterFirst.subsetOf(afterSecond) &&
-      afterSecond.size > afterFirst.size)
     assert(read(path) == batchTwice)
     val st = Upsert.scd2ReadManifested(spark, path)
       .groupBy($"status").count().as[(String, Long)].collect().toMap

@@ -59,6 +59,48 @@ class UpsertIdsSpec extends SparkSpec {
     assert(replay.toSeq == out.toSeq)
   }
 
+  // scd2MergeManifested is the partitioned SCD2 writer: closed/ holds
+  // append-only history deltas, current_e<epoch> the rewritten current set
+  test("scd2MergeIntoPartitioned: closed history files are never rewritten") {
+    import java.sql.Timestamp
+    def ts(s: String) = Timestamp.valueOf(s)
+    val path = java.nio.file.Files.createTempDirectory("graft_scd2t")
+      .toString + "/hist"
+    def upd(rows: (Long, String, Timestamp)*) =
+      rows.toSeq.toDF("k", "attr", "ts")
+    val t1 = ts("1995-01-01 00:00:00"); val t2 = ts("2000-01-01 00:00:00")
+    val t3 = ts("2001-01-01 00:00:00")
+    Upsert.scd2MergeManifested(spark, path,
+      upd((1L, "A", t1), (2L, "B", t1), (3L, "C", t1)),
+      Seq("k"), Seq("attr"), "ts")
+    Upsert.scd2MergeManifested(spark, path, upd((1L, "A2", t2)),
+      Seq("k"), Seq("attr"), "ts")
+    def closedFiles() = Upsert.scd2ReadManifested(spark, path)
+      .filter($"status" === "closed")
+      .select(input_file_name()).distinct().as[String].collect().toSet
+    val afterFirst = closedFiles()
+    assert(afterFirst.nonEmpty)
+    Upsert.scd2MergeManifested(spark, path, upd((2L, "B2", t3)),
+      Seq("k"), Seq("attr"), "ts")
+    // the first change's closed files survive BY NAME — the second
+    // merge appended new closed files and only rewrote `current`
+    val afterSecond = closedFiles()
+    assert(afterFirst.subsetOf(afterSecond) &&
+      afterSecond.size > afterFirst.size)
+    // content equals the batch scd2Merge applied sequentially
+    val hist0 = upd((1L, "A", t1), (2L, "B", t1), (3L, "C", t1))
+      .select($"k", $"attr", $"ts".as("valid_from"),
+        lit(null).cast("timestamp").as("valid_to"))
+    val batch = Upsert.scd2Merge(
+      Upsert.scd2Merge(hist0, upd((1L, "A2", t2)), Seq("k"), Seq("attr"), "ts"),
+      upd((2L, "B2", t3)), Seq("k"), Seq("attr"), "ts")
+      .as[(Long, String, Timestamp, Option[Timestamp])].collect().toSet
+    val onDisk = Upsert.scd2ReadManifested(spark, path)
+      .select($"k", $"attr", $"valid_from", $"valid_to")
+      .as[(Long, String, Timestamp, Option[Timestamp])].collect().toSet
+    assert(onDisk == batch)
+  }
+
   test("mergeLatest dedups update stream to highest version per key") {
     val target = Seq((1L, "A", 0L)).toDF("k", "st", "ver")
     val updates = Seq((1L, "old", 1L), (1L, "new", 2L)).toDF("k", "st", "ver")

@@ -57,12 +57,47 @@ class MergeSinkSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("cdc sink, upserts only: in-batch dups, untouched dirs, replay") {
+  test("streaming merges equal one batch merge of all updates") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("mergesinkups").toString
+    val dir = java.nio.file.Files.createTempDirectory("mergesink").toString
     val target = s"$dir/table"
-    val mem = MemoryStream[(Long, String, Double, Long, String)]
-    val events = mem.toDF().toDF("k", "part", "v", "ver", "op")
+    val mem = MemoryStream[(Long, String, Long)]
+    val events = mem.toDF().toDF("k", "v", "ver")
+      .withColumn("part", lit("p")).withColumn("op", lit("upsert"))
+    val q = MergeSink.startCdc(events, target, Seq("part", "k"), "part",
+      "ver", "op", s"$dir/ckpt",
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    def got(): Seq[(Long, String, Long)] =
+      Upsert.readManifested(spark, target).select($"k", $"v", $"ver")
+        .orderBy("k").as[(Long, String, Long)].collect().toSeq
+    try {
+      // batch 1 creates the table; in-batch dup on k=1: latest ver wins
+      mem.addData((1L, "a0", 1L), (1L, "a1", 2L), (2L, "b0", 1L))
+      q.processAllAvailable()
+      assert(got() == Seq((1L, "a1", 2L), (2L, "b0", 1L)))
+      // batch 2 updates k=2, inserts k=3
+      mem.addData((2L, "b1", 5L), (3L, "c0", 1L))
+      q.processAllAvailable()
+      val fin = got()
+      assert(fin == Seq((1L, "a1", 2L), (2L, "b1", 5L), (3L, "c0", 1L)))
+      // equivalence: the same updates as ONE batch merge into empty
+      val all = Seq((1L, "a0", 1L), (1L, "a1", 2L), (2L, "b0", 1L),
+        (2L, "b1", 5L), (3L, "c0", 1L)).toDF("k", "v", "ver")
+      val empty = all.filter(lit(false))
+      val oneShot = Upsert.mergeLatest(empty, all, Seq("k"), "ver")
+        .orderBy("k").as[(Long, String, Long)].collect().toSeq
+      assert(oneShot == fin)
+    } finally q.stop()
+  }
+
+  test("manifested sink: partition-pruned reader-atomic merges equal " +
+      "the order-free max-version model; replay is a content no-op") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("mergesinkm").toString
+    val target = s"$dir/table"
+    val mem = MemoryStream[(Long, String, Double, Long)]
+    val events = mem.toDF().toDF("k", "part", "v", "ver")
+      .withColumn("op", lit("upsert"))
     val q = MergeSink.startCdc(events, target, Seq("part", "k"),
       "part", "ver", "op", s"$dir/ckpt",
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
@@ -71,18 +106,14 @@ class MergeSinkSpec extends SparkSpec {
         .select($"k", $"part", $"v", $"ver")
         .as[(Long, String, Double, Long)].collect().toSet
     try {
-      // in-batch duplicate on k=1: the latest version wins
-      mem.addData((1L, "a", 0.5, 1L, "upsert"), (1L, "a", 1.0, 2L, "upsert"),
-        (2L, "a", 2.0, 1L, "upsert"), (3L, "b", 3.0, 1L, "upsert"))
+      mem.addData((1L, "a", 1.0, 1L), (2L, "a", 2.0, 1L), (3L, "b", 3.0, 1L))
       q.processAllAvailable()
-      assert(got() == Set((1L, "a", 1.0, 2L), (2L, "a", 2.0, 1L),
-        (3L, "b", 3.0, 1L)))
-      // batch 2 touches partitions a and c only: b is still served
+      // batch 2 touches only partitions a and c: b is still served
       // from the first epoch's snapshot dir
-      val b2 = Seq((1L, "a", 10.0, 3L, "upsert"), (4L, "c", 4.0, 1L, "upsert"))
+      val b2 = Seq((1L, "a", 10.0, 2L), (4L, "c", 4.0, 1L))
       mem.addData(b2: _*)
       q.processAllAvailable()
-      val afterB2 = Set((1L, "a", 10.0, 3L), (2L, "a", 2.0, 1L),
+      val afterB2 = Set((1L, "a", 10.0, 2L), (2L, "a", 2.0, 1L),
         (3L, "b", 3.0, 1L), (4L, "c", 4.0, 1L))
       assert(got() == afterB2)
       val root = new org.apache.hadoop.fs.Path(target)
