@@ -16,7 +16,10 @@ package graft
   * must sit OUTSIDE any try/finally block that touches durable state;
   * the 43 current sites honor this — check before adding one. They
   * live in IngestPipeline.load (`s0_*`..`s3_*`), the Upsert writers
-  * (`merge_*`, `mergem_*`, `scd2_*`, `manifest_*`), StagedCommit's base
+  * (`merge_*`, `mergem_*`, `scd2_*`, `manifest_*` — every `mergem_*`
+  * site is a by-name argument the merge, delete and compaction writers
+  * hand to `Upsert.commitEpoch`, so it fires from that shared tail,
+  * which must therefore stay outside any try/finally), StagedCommit's base
   * swap (`swap_*`), the index maintenance ops (`ivf_*`, `bq_*`,
   * `lsh_*`, `bm25_*`, `spans_*`) and the streaming consumers
   * (`cdf_*`, `idxsink_*`, `mv_*`). */

@@ -19,6 +19,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final class AuditLog(spark: SparkSession, path: String,
                      mtimeSlackSeconds: Long = 60L) {
   import spark.implicits._
+  import AuditLog.AuditRow
 
   // DRIVER-SIDE APPEND (r22, guide §5 "the driver should do almost no
   // data work" — and its inverse: a ONE-ROW control-plane record must
@@ -75,13 +76,6 @@ final class AuditLog(spark: SparkSession, path: String,
   private def emptyTable: DataFrame =
     Seq.empty[(String, String, Int, java.sql.Timestamp)]
       .toDF("event_source", "target", "status", "ts")
-
-  /** One audit row, driver-side form. `tsSec` reproduces the former
-    * `unix_timestamp` floor the window probes compared against. */
-  private final case class AuditRow(eventSource: String, target: String,
-                                    status: Int, tsMillis: Long) {
-    def tsSec: Long = Math.floorDiv(tsMillis, 1000L)
-  }
 
   /** Per-file row memo behind the control-plane probes: audit row
     * files are WRITE-ONCE ([[append]] adds files, never rewrites
@@ -221,4 +215,13 @@ final class AuditLog(spark: SparkSession, path: String,
     rowsOf(listAudit().map(_.getPath)).collect {
       case r if r.eventSource == needle && r.status == 1 => r.target
     }.toSet
+}
+
+object AuditLog {
+  /** One audit row, driver-side form. `tsSec` reproduces the former
+    * `unix_timestamp` floor the window probes compared against. */
+  private final case class AuditRow(eventSource: String, target: String,
+                                    status: Int, tsMillis: Long) {
+    def tsSec: Long = Math.floorDiv(tsMillis, 1000L)
+  }
 }

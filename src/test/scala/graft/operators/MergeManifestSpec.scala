@@ -1037,4 +1037,56 @@ class MergeManifestSpec extends SparkSpec {
     // an Infinity upper bound keeps p2 and finds the Inf row
     assert(range(50.0, Double.PositiveInfinity) == Set(4L, 5L))
   }
+
+  /** Jobs `body` submits under a job group of its own, so concurrent
+    * activity on the shared session is not counted. A job count does
+    * not depend on machine load. */
+  private def jobsOf(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val group = java.util.UUID.randomUUID().toString
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+            js.properties.getProperty("spark.jobGroup.id") == group)
+          n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "jobsOf")
+    try { body; org.apache.spark.ListenerBusDrain.drain(sc) }
+    finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
+    n.get
+  }
+
+  test("direct writer calls submit a pinned number of jobs, on the " +
+      "single-file and the sharded manifest alike") {
+    val saved = Upsert.EpochManifest.shardThreshold
+    try for (threshold <- Seq(saved, 1)) {
+      Upsert.EpochManifest.shardThreshold = threshold
+      val path = java.nio.file.Files.createTempDirectory("graft_mmjobs")
+        .toString + "/tbl"
+      Upsert.mergeIntoManifested(spark, path,
+        rows((1 to 16).map(i => (i.toLong, "p" + (i % 4), i.toDouble, 1L)): _*),
+        keys, "part", "ver", statsCols = Seq("v"))
+      val merge = jobsOf(Upsert.mergeIntoManifested(spark, path,
+        rows((3L, "p3", 30.0, 2L), (5L, "p1", 50.0, 2L)),
+        keys, "part", "ver"))
+      val deleteKeys = jobsOf(Upsert.deleteKeysFromManifested(spark,
+        path, Seq(("p1", 5L), ("p2", 6L)).toDF("part", "k"), keys,
+        "part"))
+      val deletePred = jobsOf(Upsert.deleteFromManifested(spark, path,
+        col("k") === 7L))
+      val pcompact = jobsOf(Upsert.compactManifestedPartitions(spark,
+        path, "part", Seq("p0", "p3")))
+      val compact = jobsOf(Upsert.compactManifested(spark, path, "part"))
+      // the counts each writer made before it committed through the
+      // shared epoch commit; a change to the tail shows up here first
+      assert((merge, deleteKeys, deletePred, pcompact, compact) ==
+        ((5, 6, 6, 4, 4)), s"shardThreshold=$threshold")
+      assert(read(path) == (1 to 16).filterNot(Set(5, 6, 7).contains)
+        .map(i => (i.toLong, "p" + (i % 4),
+          if (i == 3) 30.0 else i.toDouble, if (i == 3) 2L else 1L)).toSet)
+    } finally Upsert.EpochManifest.shardThreshold = saved
+  }
 }

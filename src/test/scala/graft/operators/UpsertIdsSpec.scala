@@ -109,33 +109,6 @@ class UpsertIdsSpec extends SparkSpec {
     assert(out.toSeq == Seq((1L, "new", 2L)))
   }
 
-  test("scd2MergeLatest collapses a multi-row-per-key batch to its latest") {
-    import java.sql.Timestamp
-    def ts(s: String) = Timestamp.valueOf(s)
-    val hist = Seq(
-      (1L, "A", ts("1995-01-01 00:00:00"), Option.empty[Timestamp])
-    ).toDF("k", "attr", "valid_from", "valid_to")
-    // three versions of key 1 in ONE batch (violates scd2Merge's
-    // one-ts-per-key rule: its full-outer join would fan out)
-    val batch = Seq(
-      (1L, "A2", ts("2000-01-01 00:00:00")),
-      (1L, "A3", ts("2001-01-01 00:00:00")),
-      (1L, "A1", ts("1999-01-01 00:00:00")),
-      (2L, "B", ts("2001-01-01 00:00:00"))
-    ).toDF("k", "attr", "ts")
-    val out = Upsert.scd2MergeLatest(hist, batch, Seq("k"), Seq("attr"), "ts")
-      .as[(Long, String, Timestamp, Option[Timestamp])].collect().toSet
-    // equals scd2Merge with only the latest row per key — no fan-out,
-    // intermediate versions collapse
-    val expect = Upsert.scd2Merge(hist,
-      Seq((1L, "A3", ts("2001-01-01 00:00:00")),
-        (2L, "B", ts("2001-01-01 00:00:00"))).toDF("k", "attr", "ts"),
-      Seq("k"), Seq("attr"), "ts")
-      .as[(Long, String, Timestamp, Option[Timestamp])].collect().toSet
-    assert(out == expect)
-    assert(out.count(r => r._1 == 1L && r._4.isEmpty) == 1) // one current row
-  }
-
   test("scd2AsOf: half-open boundary — closed-at-ts gone, opened-at-ts visible") {
     import java.sql.Timestamp
     def ts(s: String) = Timestamp.valueOf(s)
