@@ -456,7 +456,7 @@ object Upsert {
     import org.apache.spark.sql.SaveMode
     // writer lease — see withTableWriter; no `return` inside
     withTableWriter(spark, tablePath) { w =>
-    EpochManifest.active(w.fs, w.root) match {
+    w.active.map(r => (r.epoch, r.slice(EpochManifest.Want.All).lines)) match {
       case None =>
         updates.select(
           keys.map(col) ++ attrs.map(col) :+ col(tsCol).as(validFrom)
@@ -609,15 +609,14 @@ object Upsert {
     * action boundary. */
   def scd2ReadManifested(spark: org.apache.spark.sql.SparkSession,
                          tablePath: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (epoch, tokens) = EpochManifest.active(fs, root).getOrElse(
-      throw new IllegalStateException(s"no SCD2 manifest under $tablePath"))
+    val m = manifestOf(spark, tablePath).slice(EpochManifest.Want.All)
+    val (epoch, tokens) = (m.epoch, m.lines)
     val cur = spark.read.parquet(s"$tablePath/current_e$epoch")
       .withColumn("status", lit("current"))
     if (tokens.isEmpty) cur
     else {
       val closedDir = new org.apache.hadoop.fs.Path(s"$tablePath/closed")
+      val fs = closedDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val visible = tokens.toSet
       val files = scala.collection.mutable.Buffer.empty[String]
       StagedCommit.walkParquet(fs, closedDir) { st =>
@@ -652,6 +651,11 @@ object Upsert {
             "against the new head")
     /** Touch the lease so a healthy long write is not judged stale. */
     def refresh(): Unit = StagedCommit.refreshLease(fs, qroot, token)
+    /** The active manifest ([[EpochManifest.active]]). */
+    def active: Option[EpochManifest.Root] = EpochManifest.active(fs, root)
+    /** The active manifest, which must exist. */
+    def manifest: EpochManifest.Root = active.getOrElse(
+      throw new IllegalStateException(s"no manifest under $tablePath"))
   }
 
   /** WRITER LEASE (VERDICT r18 #6): one writer at a time is the
@@ -740,18 +744,11 @@ object Upsert {
     w.fence()
     w.refresh()
     val (newDirs, freshFiles) = listEpoch(w.fs, w.tablePath, next)
-    val freshStats =
-      if (statCols.isEmpty || newDirs.isEmpty)
-        Map.empty[(String, String), (String, String)]
-      else {
-        val rd = w.spark.read.option("basePath", epochDir)
-        computeStats(ddlOf(header)
-          .map(org.apache.spark.sql.types.StructType.fromDDL)
-          .fold(rd)(rd.schema).parquet(epochDir), partitionCol, statCols)
-      }
-    val lines = m.lines
-    val entries = entryLines(lines).map(parseManifestEntry)
-    val pmap = pmapOf(lines)
+    val freshStats = computeStats(w.spark, w.tablePath, next, newDirs,
+      freshFiles, ddlOf(header).map(org.apache.spark.sql.types.StructType
+        .fromDDL), partitionCol, statCols)
+    val entries = m.entries
+    val pmap = m.pmap
     if (m.info.isV2) {
       require(newDirs.subsetOf(touchedDirs),
         s"epoch $next under ${w.tablePath} wrote dirs outside the " +
@@ -762,7 +759,7 @@ object Upsert {
           filesLinesOut(freshFiles.filter(_._1._1 == d)))
       }.toMap
       val changedBuckets = touchedDirs.map(EpochManifest.bucketOf).map { b =>
-        b -> (m.leaves.getOrElse(b, Seq.empty).filterNot(l =>
+        b -> (m.leaves.get(b).fold(Seq.empty[String])(_.lines).filterNot(l =>
             EpochManifest.dirKeyOf(l).exists(touchedDirs.contains)) ++
           newDirs.toSeq.filter(d => EpochManifest.bucketOf(d) == b)
             .flatMap(freshByDir))
@@ -787,11 +784,11 @@ object Upsert {
       val refEpochs = newEntries.map(_._2).toSet
       val newStats =
         if (statCols.isEmpty) Map.empty[(String, String), (String, String)]
-        else statsOf(lines).filter { case ((d, _), _) =>
+        else statsOf(m.lines).filter { case ((d, _), _) =>
           !touchedDirs.contains(d) && liveDirs.contains(d)
         } ++ freshStats
       val newEntrySet = newEntries.toSet
-      val newFiles = filesOf(lines).filter { case (k, _) =>
+      val newFiles = m.files.filter { case (k, _) =>
         newEntrySet.contains(k) } ++ freshFiles
       w.fence()
       EpochManifest.publish(w.fs, w.root, next, header ++
@@ -811,19 +808,12 @@ object Upsert {
   private def rewriteEntries(w: TableWriter, m: EpochManifest.Slice,
                              dirs: Set[String], partitionCol: String,
                              retain: Int)(keep: DataFrame => DataFrame): Unit = {
-    val lines = m.lines
-    val touchedEntries = entryLines(lines).map(parseManifestEntry)
-      .filter(e => dirs.contains(e._1))
-    if (touchedEntries.nonEmpty) {
-      val touchedDirs = touchedEntries.map(_._1).toSet
-      val ddl = ddlOf(lines)
-      val slice = readMapped(w.spark, w.tablePath, touchedEntries,
-        ddl.map(org.apache.spark.sql.types.StructType.fromDDL),
-        pmapOf(lines), filesOf(lines)).get
+    val touchedDirs = m.entries.map(_._1).filter(dirs.contains).toSet
+    if (touchedDirs.nonEmpty) {
+      val slice = readSlice(w.spark, w.tablePath, m, touchedDirs.contains)
       commitEpoch(w, m, touchedDirs,
         clusteredForWrite(keep(slice), partitionCol, touchedDirs.size),
-        partitionCol, ddl.map("#ddl\t" + _).toSeq,
-        if (m.info.isV2) m.info.statsColsRec else statsColsOf(lines),
+        partitionCol, m.ddl.map("#ddl\t" + _).toSeq, m.statsCols,
         "mergem: delete", retain,
         afterWrite = graft.FailPoint.hit("mergem_delete_after_write"),
         afterPublish = graft.FailPoint.hit("mergem_delete_after_publish"))
@@ -898,7 +888,7 @@ object Upsert {
     require(updates.columns.contains(version),
       s"mergeIntoManifested needs the $version column on the updates")
     withTableWriter(spark, tablePath) { w =>
-    EpochManifest.activeRoot(w.fs, w.root) match {
+    w.active match {
       case None =>
         // the same non-null partition invariant every LATER write path
         // enforces (their touched-dir collects require it row by row):
@@ -927,16 +917,14 @@ object Upsert {
             version).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
             .partitionBy(partitionCol).parquet(epoch0)
         }
-        val stats0 = computeStats(
-          spark.read.option("basePath", epoch0)
-            .schema(updates.schema).parquet(epoch0),
-          partitionCol, statsCols.distinct.sorted)
         val (dirs0, files0) = listEpoch(w.fs, tablePath, 0)
+        val stats0 = computeStats(spark, tablePath, 0, dirs0, files0,
+          Some(updates.schema), partitionCol, statsCols.distinct.sorted)
         EpochManifest.publish(w.fs, w.root, 0, ddlHeader(updates) ++
           statsLinesOut(stats0) ++
           filesLinesOut(files0) ++
           dirs0.toSeq.sorted.map(d => s"$d\t0"))
-      case Some((epoch, rootInfo)) =>
+      case Some(active) =>
         // touched partitions, as the DIRECTORY NAMES Spark writes for
         // them — dir-level pruning against the manifest, no data read
         // for the untouched mass
@@ -945,14 +933,10 @@ object Upsert {
               s"mergem: touched-partition collect ($tablePath)") {
             partitionStringsOneJob(updates, partitionCol)
           }))
-        // v2 (sharded manifest, VERDICT r18 #1): resolve ONLY the
-        // touched buckets' leaves — the untouched mass is neither
-        // read nor rewritten, so the whole publish is O(touched)
-        val m = EpochManifest.sliceOf(w.fs, w.root, epoch, rootInfo,
-          touchedDirs)
-        val lines = m.lines
-        val touchedEntries = entryLines(lines).map(parseManifestEntry)
-          .filter(e => touchedDirs.contains(e._1))
+        // only the touched dirs' metadata loads: the untouched mass is
+        // neither read nor rewritten, so the whole publish is O(touched)
+        val m = active.slice(EpochManifest.Want.Dirs(touchedDirs))
+        val touchedEntries = m.entries.filter(e => touchedDirs.contains(e._1))
         val cols = updates.columns.toSeq
         // read the touched slice under the manifest-recorded schema:
         // dir-name type inference would turn a string partition value
@@ -960,8 +944,7 @@ object Upsert {
         // string — the merged output would carry a ghost "1" partition
         // while the real "01" key is treated as all-new. Legacy tables
         // without the header keep the cast-back fallback.
-        val sliceSchema = ddlOf(lines)
-          .map(org.apache.spark.sql.types.StructType.fromDDL)
+        val sliceSchema = m.schema
         // SCHEMA EVOLUTION is add-and-widen: every stored column must
         // survive (a dropped column would silently erase data on the
         // next merge of its partition), and its type may only change
@@ -1023,7 +1006,7 @@ object Upsert {
         // recorded schema from the manifest's `#files` inventories, so
         // no epoch dir is listed (legacy manifests list and infer)
         val storedSlice = readMapped(spark, tablePath, touchedEntries,
-          sliceSchema, pmapOf(lines), filesOf(lines))
+          sliceSchema, m.pmap, m.files)
         // add-column backfill as typed nulls, then the cast that lifts
         // widened columns (and an inferred partition column) to the
         // updates' type, a no-op for unchanged ones, so the union below
@@ -1052,8 +1035,7 @@ object Upsert {
         commitEpoch(w, m, touchedDirs, merged, partitionCol,
           ddlHeader(updates) ++ widened.result().map { case (n, from, to) =>
             s"#widen\t$n\t$from\t$to" },
-          ((if (rootInfo.isV2) rootInfo.statsColsRec
-            else statsColsOf(lines)) ++ statsCols).distinct.sorted,
+          (m.statsCols ++ statsCols).distinct.sorted,
           "mergem:", retain,
           beforeWrite = graft.FailPoint.hit("mergem_before_epoch_write"),
           afterWrite = graft.FailPoint.hit("mergem_after_epoch_write"),
@@ -1063,113 +1045,42 @@ object Upsert {
   }
 
   /** Snapshot reader for [[mergeIntoManifested]] tables: exactly the
-    * active manifest's referenced partition snapshots. Staleness
-    * contract as [[scd2ReadManifested]]: resolution happens here, the
-    * scan at the caller's action — lag past the one retained epoch and
-    * the sweep may reclaim a referenced dir mid-scan
-    * (FileNotFoundException); re-call to re-resolve. */
+    * active manifest's referenced partition snapshots, resolved through
+    * the read entry ([[EpochManifest.active]]). Staleness contract as
+    * [[scd2ReadManifested]]: resolution happens here, the scan at the
+    * caller's action — lag past the one retained epoch and the sweep
+    * may reclaim a referenced dir mid-scan (FileNotFoundException);
+    * re-call to re-resolve. */
   def readManifested(spark: org.apache.spark.sql.SparkSession,
-                     tablePath: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (_, info) = EpochManifest.activeRoot(fs, root).getOrElse(
-      throw new IllegalStateException(s"no manifest under $tablePath"))
-    readEntriesRoot(spark, tablePath, fs, root, info)
-  }
-
-  /** Full-resolution entry shared by [[readManifested]] and
-    * [[readManifestedAt]]: v1 roots go through the classic line path;
-    * v2 roots parse their leaves IN PARALLEL, each leaf folded
-    * straight to (entries, file inventories) — at 10⁶ partitions the
-    * single-threaded line concat + re-scan was the whole resolution
-    * cost. Leaves partition dirs disjointly, so the merges are
-    * concatenation and disjoint map union. */
-  private def readEntriesRoot(spark: org.apache.spark.sql.SparkSession,
-                              tablePath: String,
-                              fs: org.apache.hadoop.fs.FileSystem,
-                              root: org.apache.hadoop.fs.Path,
-                              info: Upsert.EpochManifest.RootInfo)
-      : DataFrame =
-    if (!info.isV2) readEntries(spark, tablePath, info.lines)
-    else {
-      val small = info.small
-      val schemaOpt = ddlOf(small)
-        .map(org.apache.spark.sql.types.StructType.fromDDL)
-      val parsed = EpochManifest.mapLeaves(fs, root, info)(ls =>
-        (entryLines(ls).map(parseManifestEntry), filesOf(ls)))
-      val entries = parsed.flatMap(_._1)
-      val files = parsed.foldLeft(
-        Map.empty[(String, Long), Seq[(String, Long)]])(_ ++ _._2)
-      readMapped(spark, tablePath, entries, schemaOpt, pmapOf(small),
-        files).orElse(
-        schemaOpt.map(sch => spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)))
-        .getOrElse(throw new IllegalStateException(
-          s"empty manifest under $tablePath"))
-    }
+                     tablePath: String): DataFrame =
+    readSlice(spark, tablePath,
+      manifestOf(spark, tablePath).slice(EpochManifest.Want.All))
 
   /** MANIFEST-PRUNED reader: only the named partition values'
-    * snapshot dirs are resolved — the rest of the table is never
-    * listed, let alone opened. [[readManifested]] followed by a
-    * partition filter prunes the DATA at planning time, but still
-    * pays one listing per referenced dir at resolution; on a table
-    * with tens of thousands of partitions that listing IS the read
-    * cost for a narrow consumer, so the pruning has to happen at the
-    * manifest, exactly like the merge's own touched-slice read.
-    * Unknown values simply match nothing (same as a filter). */
+    * snapshot dirs are resolved — the read entry loads only their
+    * buckets ([[EpochManifest.Want.Values]]) and the rest of the table
+    * is never listed, let alone opened. Unknown values simply match
+    * nothing (same as a filter). */
   def readManifestedPartitions(spark: org.apache.spark.sql.SparkSession,
                                tablePath: String,
                                values: Seq[String]): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (epoch, rootInfo) = EpochManifest.activeRoot(fs, root).getOrElse(
-      throw new IllegalStateException(s"no manifest under $tablePath"))
-    // v2: the recorded `#partcol` maps each wanted value straight to
-    // its dir name and bucket — only those buckets' leaves load, so a
-    // narrow read of a 10⁵-partition table touches a handful of small
-    // files instead of the whole per-dir mass
-    val lines = rootInfo.partColOpt match {
-      case Some(pc) if rootInfo.isV2 =>
-        EpochManifest.sliceOf(fs, root, epoch, rootInfo,
-          partitionDirsOf(pc, values)).lines
-      case _ if rootInfo.isV2 =>
-        // materialize the root ALREADY IN HAND (ADVICE r19, low): a
-        // second activeRoot call racing a concurrent publish/sweep
-        // could resolve a different epoch than rootInfo — or throw on
-        // a momentarily-changed listing
-        EpochManifest.materialize(fs, root, rootInfo)
-      case _ => rootInfo.lines
-    }
     val suffixes = values.map(v => "=" + org.apache.spark.sql.catalyst
       .catalog.ExternalCatalogUtils.escapePathName(v)).toSet
-    val pruned = lines.filter(l => l.startsWith("#") ||
-      suffixes.exists(s => parseManifestEntry(l)._1.endsWith(s)))
-    if (entryLines(pruned).nonEmpty) readEntries(spark, tablePath, pruned)
-    else ddlOf(lines).map(d => spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(d))).getOrElse(
-      throw new IllegalStateException(
-        s"readManifestedPartitions: no partition of $tablePath " +
-          s"matches ${values.mkString(", ")} and the table has no " +
-          "recorded schema to shape an empty result"))
+    readSlice(spark, tablePath, manifestOf(spark, tablePath)
+      .slice(EpochManifest.Want.Values(values)),
+      d => suffixes.exists(d.endsWith))
   }
 
   /** TIME TRAVEL: the table exactly as manifest `epoch` published it.
     * Every manifest is immutable and every epoch dir append-only, so a
     * historical manifest that is still retained reconstructs its
-    * snapshot byte-for-byte. Retention is the merge's `retain` knob —
-    * a version older than the newest `retain` manifests has been swept
-    * and throws here (loudly, on resolution, not mid-scan). */
+    * snapshot byte-for-byte. A version older than the newest `retain`
+    * manifests is gone and [[EpochManifest.at]] throws on resolution,
+    * not mid-scan. */
   def readManifestedAt(spark: org.apache.spark.sql.SparkSession,
-                       tablePath: String, epoch: Long): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val info = EpochManifest.readRoot(fs, root, epoch).getOrElse(
-      throw new IllegalStateException(
-        s"no manifest $epoch under $tablePath — missing or already " +
-          "swept (raise the merge's retain knob to keep more history)"))
-    readEntriesRoot(spark, tablePath, fs, root, info)
-  }
+                       tablePath: String, epoch: Long): DataFrame =
+    readSlice(spark, tablePath,
+      manifestOf(spark, tablePath, Some(epoch)).slice(EpochManifest.Want.All))
 
   /** CHANGE DATA FEED between two retained manifests: one row per
     * changed key, `_change_type` ∈ insert | update_preimage |
@@ -1177,10 +1088,11 @@ object Upsert {
     * a downstream consumer reverse or re-apply the interval). Cost is
     * bounded by the CHANGED partitions: a dir both manifests reference
     * at the same epoch is byte-identical by construction and is never
-    * read — the pruning that makes a feed over a wide table viable.
+    * read, and each endpoint loads only the buckets that differ
+    * ([[EpochManifest.Want.Changed]]).
     * Columns added between the epochs read as null on the before side
     * (add-only evolution). A RENAME in the interval is resolved
-    * automatically: the interval's manifests are walked for their
+    * automatically: the interval's manifest roots are walked for their
     * one-shot `#rename` event lines and the before side reads under
     * the TO-side logical names (every retained manifest between the
     * endpoints exists by construction — epochs are contiguous and the
@@ -1190,44 +1102,23 @@ object Upsert {
     * diff in two hops around the drop instead. A column added AND
     * dropped strictly inside the interval is invisible at both
     * endpoints and is correctly ignored. Both endpoint manifests must
-    * still be retained (`retain` knob) or resolution throws. */
+    * still be retained or [[EpochManifest.at]] throws. */
   def changesBetween(spark: org.apache.spark.sql.SparkSession,
                      tablePath: String, fromEpoch: Long, toEpoch: Long,
                      keys: Seq[String]): DataFrame = {
     import org.apache.spark.sql.types.StructType
     require(fromEpoch < toEpoch,
       s"changesBetween: fromEpoch $fromEpoch must precede toEpoch $toEpoch")
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def manifest(e: Long): Seq[String] =
-      EpochManifest.read(fs, root, e).getOrElse(
-        throw new IllegalStateException(
-          s"no manifest $e under $tablePath — missing or already swept " +
-            "(raise the merge's retain knob to keep more history)"))
-    def rootOf(e: Long): EpochManifest.RootInfo =
-      EpochManifest.readRoot(fs, root, e).getOrElse(
-        throw new IllegalStateException(
-          s"no manifest $e under $tablePath — missing or already swept " +
-            "(raise the merge's retain knob to keep more history)"))
-    // SHARDED FAST PATH: when both endpoints are manifest trees, a
-    // bucket carrying the SAME leaf reference on both sides is
-    // byte-identical per-dir metadata — no dir in it can have moved,
-    // so only the DIFFERING buckets' leaves load on either side. A
-    // CDF poll against a wide, lightly-churned table reads two ~3 KB
-    // roots plus the churned buckets, not 2×O(live partitions) text.
-    val (fromInfo, toInfo) = (rootOf(fromEpoch), rootOf(toEpoch))
-    val (fromLines, toLines) =
-      if (fromInfo.isV2 && toInfo.isV2) {
-        val diff = (0 until EpochManifest.LeafBuckets).filter(b =>
-          fromInfo.leafRefs.get(b) != toInfo.leafRefs.get(b))
-        (EpochManifest.sliceOfBuckets(fs, root, fromEpoch, fromInfo,
-          diff).lines,
-          EpochManifest.sliceOfBuckets(fs, root, toEpoch, toInfo, diff).lines)
-      } else (manifest(fromEpoch), manifest(toEpoch))
-    val fromSch = ddlOf(fromLines).map(StructType.fromDDL).getOrElse(
+    // a dir both endpoints reference at the same epoch cannot have
+    // moved, so each side loads only the buckets that differ
+    val (fromRoot, toRoot) = (manifestOf(spark, tablePath, Some(fromEpoch)),
+      manifestOf(spark, tablePath, Some(toEpoch)))
+    val from = fromRoot.slice(EpochManifest.Want.Changed(toRoot))
+    val to = toRoot.slice(EpochManifest.Want.Changed(fromRoot))
+    val fromSch = from.schema.getOrElse(
       throw new IllegalStateException(
         s"changesBetween needs recorded schemas (legacy table at $tablePath)"))
-    val toSch = ddlOf(toLines).map(StructType.fromDDL).get
+    val toSch = to.schema.get
     // compose the logical-name correspondence across the interval from
     // the one-shot #rename/#dropcol event lines (manifest epochs are
     // contiguous — every publish is active+1 — and the sweep keeps a
@@ -1236,10 +1127,9 @@ object Upsert {
     var nameMap: Map[String, String] =
       fromSch.fieldNames.map(n => n -> n).toMap
     ((fromEpoch + 1) to toEpoch).foreach { e =>
-      // event lines are ROOT-resident in a sharded manifest: the
-      // interval walk never materializes an intermediate tree
-      val info = if (e == toEpoch) toInfo else rootOf(e)
-      val ls = if (info.isV2) info.small else info.lines
+      // event lines are root-resident: the walk loads no leaf
+      val ls = (if (e == toEpoch) toRoot
+                else manifestOf(spark, tablePath, Some(e))).lines
       ls.filter(_.startsWith("#dropcol\t")).foreach { l =>
         val dropped = l.split("\t", -1)(1)
         nameMap.find(_._2.equalsIgnoreCase(dropped)).foreach { case (f, _) =>
@@ -1270,8 +1160,8 @@ object Upsert {
     }
     val mappedFromSch = StructType(fromSch.fields.map(f =>
       f.copy(name = mapped(f.name))))
-    val fromMap = entryLines(fromLines).map(parseManifestEntry).toMap
-    val toMap = entryLines(toLines).map(parseManifestEntry).toMap
+    val fromMap = from.entries.toMap
+    val toMap = to.entries.toMap
     // ONLY dirs whose snapshot moved: same (dir -> epoch) on both
     // sides means byte-identical files — skip without reading
     val changedDirs = (fromMap.keySet ++ toMap.keySet)
@@ -1281,11 +1171,9 @@ object Upsert {
     def side(pmap: Map[Long, Map[String, String]], m: Map[String, Long],
              sch: StructType, tag: String,
              files: Map[(String, Long), Seq[(String, Long)]]): DataFrame = {
-      val entries = m.toSeq.filter(e => changedDirs.contains(e._1))
-      val df = readMapped(spark, tablePath, entries,
-        Some(sch), pmap, files).getOrElse(
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch))
+      val df = readOrEmpty(spark, tablePath,
+        m.toSeq.filter(e => changedDirs.contains(e._1)), Some(sch), pmap,
+        files)
       // align to the TO schema (nulls for columns the epoch predates)
       // and upcast widened columns so the images union type-identically
       val full = toSch.fields.foldLeft(df) { (d, f) =>
@@ -1302,7 +1190,7 @@ object Upsert {
     // from manifest's own resolution with the interval's rename chain.
     // Dead markers are carried so a to-side re-added name keeps reading
     // absent from retired physical columns.
-    val fromPmap = pmapOf(fromLines)
+    val fromPmap = from.pmap
     val beforePmap: Map[Long, Map[String, String]] =
       fromMap.values.toSet[Long].map { e =>
         val m = fromPmap.getOrElse(e, Map.empty[String, String])
@@ -1314,9 +1202,8 @@ object Upsert {
         e -> (m.filter(_._2 == DeadLogical) ++ resolved)
       }.toMap
     val before = side(beforePmap, fromMap, mappedFromSch, "_b_",
-      filesOf(fromLines))
-    val after = side(pmapOf(toLines), toMap, toSch, "_a_",
-      filesOf(toLines))
+      from.files)
+    val after = side(to.pmap, toMap, toSch, "_a_", to.files)
     val joined = before.join(after, keys, "full_outer")
     val bVals = struct(valueCols.map(c => col(s"_b_$c").as(c)): _*)
     val aVals = struct(valueCols.map(c => col(s"_a_$c").as(c)): _*)
@@ -1359,15 +1246,9 @@ object Upsert {
     require(fromEpoch <= toEpoch,
       s"changeFeedSpans: fromEpoch $fromEpoch must not exceed $toEpoch")
     if (fromEpoch == toEpoch) return Seq.empty
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dropEpochs = ((fromEpoch + 1) to toEpoch).filter { e =>
-      EpochManifest.read(fs, root, e).getOrElse(
-        throw new IllegalStateException(
-          s"no manifest $e under $tablePath — missing or already swept " +
-            "(raise the merge's retain knob to keep more history)"))
-        .exists(_.startsWith("#dropcol\t"))
-    }
+    val dropEpochs = ((fromEpoch + 1) to toEpoch).filter(e =>
+      manifestOf(spark, tablePath, Some(e)).lines
+        .exists(_.startsWith("#dropcol\t")))
     val bounds = (Seq(fromEpoch) ++
       dropEpochs.flatMap(e => Seq(e - 1, e)) ++ Seq(toEpoch))
     bounds.grouped(2).toSeq.collect {
@@ -1404,38 +1285,28 @@ object Upsert {
     * retaining these manifests (the sweep keeps a suffix window). */
   def schemaEventsBetween(spark: org.apache.spark.sql.SparkSession,
                           tablePath: String, fromEpoch: Long, toEpoch: Long)
-      : Seq[(Long, String, String, String)] = {
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      : Seq[(Long, String, String, String)] =
     ((fromEpoch + 1) to toEpoch).flatMap { e =>
-      EpochManifest.read(fs, root, e).getOrElse(
-        throw new IllegalStateException(
-          s"no manifest $e under $tablePath — missing or already swept " +
-            "(raise the merge's retain knob to keep more history)"))
-        .flatMap { l =>
-          if (l.startsWith("#rename\t")) {
-            val p = l.split("\t", -1); Some((e, "rename", p(1), p(2)))
-          } else if (l.startsWith("#dropcol\t")) {
-            val p = l.split("\t", -1); Some((e, "dropcol", p(1), ""))
-          } else if (l.startsWith("#widen\t")) {
-            // (col, toType) — the fromType is implied by the previous
-            // manifest's #ddl; feed consumers only need "a widening
-            // happened here" to fail a pinned-narrow tail fast
-            val p = l.split("\t", -1); Some((e, "widen", p(1), p(3)))
-          } else None
-        }
+      manifestOf(spark, tablePath, Some(e)).lines.flatMap { l =>
+        if (l.startsWith("#rename\t")) {
+          val p = l.split("\t", -1); Some((e, "rename", p(1), p(2)))
+        } else if (l.startsWith("#dropcol\t")) {
+          val p = l.split("\t", -1); Some((e, "dropcol", p(1), ""))
+        } else if (l.startsWith("#widen\t")) {
+          // (col, toType) — the fromType is implied by the previous
+          // manifest's #ddl; feed consumers only need "a widening
+          // happened here" to fail a pinned-narrow tail fast
+          val p = l.split("\t", -1); Some((e, "widen", p(1), p(3)))
+        } else None
+      }
     }
-  }
 
   /** The active manifest's epoch, or None for an uninitialized table —
     * the "how far can a feed go" probe the CDF poller needs without
     * computing a diff. */
   def manifestedEpoch(spark: org.apache.spark.sql.SparkSession,
-                      tablePath: String): Option[Long] = {
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    EpochManifest.active(fs, root).map(_._1)
-  }
+                      tablePath: String): Option[Long] =
+    activeOf(spark, tablePath).map(_.epoch)
 
   /** The active manifest's recorded logical schema, or None for an
     * uninitialized table / a legacy manifest written before the `#ddl`
@@ -1444,13 +1315,9 @@ object Upsert {
     * the same answer the readers resolve internally. */
   def manifestedSchema(spark: org.apache.spark.sql.SparkSession,
                        tablePath: String)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    EpochManifest.active(fs, root).flatMap { case (_, lines) =>
-      ddlOf(lines).map(org.apache.spark.sql.types.StructType.fromDDL)
-    }
-  }
+      : Option[org.apache.spark.sql.types.StructType] =
+    activeOf(spark, tablePath).flatMap(r =>
+      ddlOf(r.lines).map(org.apache.spark.sql.types.StructType.fromDDL))
 
   /** Incremental change-feed consumption — the poll-and-checkpoint
     * shape most CDC consumers actually run: everything that changed
@@ -1463,12 +1330,10 @@ object Upsert {
   def changesSince(spark: org.apache.spark.sql.SparkSession,
                    tablePath: String, sinceEpoch: Long,
                    keys: Seq[String]): (DataFrame, Long) = {
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (active, lines) = EpochManifest.active(fs, root).getOrElse(
-      throw new IllegalStateException(s"no manifest under $tablePath"))
+    val root = manifestOf(spark, tablePath)
+    val active = root.epoch
     if (active == sinceEpoch) {
-      val sch = ddlOf(lines)
+      val sch = ddlOf(root.lines)
         .map(org.apache.spark.sql.types.StructType.fromDDL).getOrElse(
         throw new IllegalStateException(
           s"changesSince needs a recorded schema under $tablePath"))
@@ -1478,33 +1343,64 @@ object Upsert {
       // column order matches changesBetween: keys, values, change type
       val ordered = keys ++ sch.fieldNames.filterNot(c =>
         keys.exists(_.equalsIgnoreCase(c))) :+ "_change_type"
-      (spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(
-          ordered.map(n =>
-            shape.find(_.name.equalsIgnoreCase(n)).get))), active)
+      (emptyFrame(spark, org.apache.spark.sql.types.StructType(
+        ordered.map(n => shape.find(_.name.equalsIgnoreCase(n)).get))),
+        active)
     } else (changesBetween(spark, tablePath, sinceEpoch, active, keys),
       active)
   }
 
-  private def readEntries(spark: org.apache.spark.sql.SparkSession,
-                          tablePath: String,
-                          lines: Seq[String]): DataFrame = {
-    // pin the writer's schema when the manifest recorded it: partition
-    // values come back in their ORIGINAL type (no dir-name inference),
-    // and every epoch group reads type-identically so the union below
-    // never coerces a column
-    val schemaOpt = ddlOf(lines)
-      .map(org.apache.spark.sql.types.StructType.fromDDL)
-    readMapped(spark, tablePath, entryLines(lines).map(parseManifestEntry),
-      schemaOpt, pmapOf(lines), filesOf(lines)).orElse(
-      // a table whose every row was deleted has a manifest with no
-      // entries but a recorded schema — an empty table, not an error
-      schemaOpt.map(sch => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)))
-      .getOrElse(
-      throw new IllegalStateException(s"empty manifest under $tablePath"))
+  /** `tablePath`'s active manifest ([[EpochManifest.active]]), None
+    * for an uninitialized table. */
+  private def activeOf(spark: org.apache.spark.sql.SparkSession,
+                       tablePath: String): Option[EpochManifest.Root] = {
+    val root = new org.apache.hadoop.fs.Path(tablePath)
+    EpochManifest.active(
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
   }
+
+  /** `tablePath`'s manifest `at` ([[EpochManifest.at]]), or its active
+    * one, which must exist. */
+  private def manifestOf(spark: org.apache.spark.sql.SparkSession,
+                         tablePath: String,
+                         at: Option[Long] = None): EpochManifest.Root =
+    at match {
+      case Some(e) =>
+        val root = new org.apache.hadoop.fs.Path(tablePath)
+        EpochManifest.at(
+          root.getFileSystem(spark.sparkContext.hadoopConfiguration), root, e)
+      case None => activeOf(spark, tablePath).getOrElse(
+        throw new IllegalStateException(s"no manifest under $tablePath"))
+    }
+
+  /** The entries of `m` whose dir `keep` accepts, as one frame under
+    * the manifest's recorded schema and column mappings. */
+  private def readSlice(spark: org.apache.spark.sql.SparkSession,
+                        tablePath: String, m: EpochManifest.Slice,
+                        keep: String => Boolean = _ => true): DataFrame =
+    readOrEmpty(spark, tablePath, m.entries.filter(e => keep(e._1)),
+      m.schema, m.pmap, m.files)
+
+  /** [[readMapped]], where no entry at all is the empty frame of the
+    * recorded schema — a table whose every row was deleted, or a read
+    * that pruned every partition, is empty, not an error. */
+  private def readOrEmpty(spark: org.apache.spark.sql.SparkSession,
+                          tablePath: String, entries: Seq[(String, Long)],
+                          schemaOpt: Option[org.apache.spark.sql.types.StructType],
+                          pmap: Map[Long, Map[String, String]],
+                          files: Map[(String, Long), Seq[(String, Long)]])
+      : DataFrame =
+    readMapped(spark, tablePath, entries, schemaOpt, pmap, files)
+      .orElse(schemaOpt.map(emptyFrame(spark, _)))
+      .getOrElse(throw new IllegalStateException(
+        s"no entry of the manifest under $tablePath is read and it " +
+          "records no schema to shape an empty result"))
+
+  private def emptyFrame(spark: org.apache.spark.sql.SparkSession,
+                         schema: org.apache.spark.sql.types.StructType)
+      : DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   /** Epoch-grouped read of manifest entries: each group under its
     * PHYSICAL column names (renames resolved via `pmap`, widening
@@ -1571,18 +1467,14 @@ object Upsert {
                            predicate: org.apache.spark.sql.Column,
                            retain: Int = 2): Unit =
     withTableWriter(spark, tablePath) { w =>
-      val (epoch, info) = EpochManifest.activeRoot(w.fs, w.root).getOrElse(
-        throw new IllegalStateException(s"no manifest under $tablePath"))
       // the predicate may match in any partition: every leaf loads
-      val m = EpochManifest.sliceOfBuckets(w.fs, w.root, epoch, info,
-        info.leafRefs.keys)
-      val entries = entryLines(m.lines).map(parseManifestEntry)
-      if (entries.nonEmpty) {
+      val m = w.manifest.slice(EpochManifest.Want.All)
+      if (m.entries.nonEmpty) {
         val partitionCol = org.apache.spark.sql.catalyst.catalog
           .ExternalCatalogUtils.unescapePathName(
-            entries.head._1.takeWhile(_ != '='))
+            m.entries.head._1.takeWhile(_ != '='))
         val touchedDirs = partitionDirsOf(partitionCol,
-          readEntries(spark, tablePath, m.lines).filter(predicate)
+          readSlice(spark, tablePath, m).filter(predicate)
             .select(col(partitionCol).cast("string")).distinct()
             .collect().toSeq.map(_.getString(0)))
         // empty touched set: nothing matches, converged no-op
@@ -1617,23 +1509,18 @@ object Upsert {
     require(keys.contains(partitionCol),
       s"$partitionCol must be part of the delete key — it locates the " +
         "touched partitions")
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (EpochManifest.activeRoot(fs, root).isEmpty)
+    if (activeOf(spark, tablePath).isEmpty)
       return // nothing to delete from (fast path, outside the lease)
     withTableWriter(spark, tablePath) { w =>
-      val (epoch, rootInfo) = EpochManifest.activeRoot(w.fs, w.root)
-        .getOrElse(throw new IllegalStateException(
-          s"manifest vanished under $tablePath"))
+      val active = w.manifest
       val touchedDirs = partitionDirsOf(partitionCol,
         touched.getOrElse(labeled(spark,
             s"mergem: delete touched-partition collect ($tablePath)") {
           partitionStringsOneJob(keyBatch, partitionCol)
         }))
-      // v2: resolve only the touched buckets' leaves — the delete's
+      // only the touched dirs' metadata loads — the delete's
       // discovery, rewrite, AND publish are all O(touched)
-      val m = EpochManifest.sliceOf(w.fs, w.root, epoch, rootInfo,
-        touchedDirs)
+      val m = active.slice(EpochManifest.Want.Dirs(touchedDirs))
       // a broadcast hash anti-join: the slice streams through it with
       // no exchange and no sort, so the write's clustering exchange is
       // its only one — a hot partition's rows all land in one task
@@ -1662,19 +1549,15 @@ object Upsert {
                         tablePath: String, partitionCol: String,
                         retain: Int = 2): Unit =
     withTableWriter(spark, tablePath) { w =>
-      val (epoch, info) = EpochManifest.activeRoot(w.fs, w.root).getOrElse(
-        throw new IllegalStateException(s"no manifest under $tablePath"))
-      val m = EpochManifest.sliceOfBuckets(w.fs, w.root, epoch, info,
-        info.leafRefs.keys)
-      val lines = m.lines
-      val all = readEntries(spark, tablePath, lines)
-      commitEpoch(w, m, entryLines(lines).map(parseManifestEntry(_)._1).toSet,
+      val m = w.manifest.slice(EpochManifest.Want.All)
+      val all = readSlice(spark, tablePath, m)
+      commitEpoch(w, m, m.entries.map(_._1).toSet,
         all.repartition(col(partitionCol)), partitionCol,
         // a table written before the #ddl header gets the schema its
         // rows were just read under, so rename and drop accept it
-        Seq("#ddl\t" + ddlOf(lines).getOrElse(all.schema.toDDL)),
-        // zone maps: a full rewrite recomputes them all
-        statsColsOf(lines), "mergem: compact", retain,
+        Seq("#ddl\t" + m.ddl.getOrElse(all.schema.toDDL)),
+        // zone maps: a full rewrite recomputes every column a dir has
+        statsColsOf(m.lines), "mergem: compact", retain,
         // the compact is the table's heal-everything pass: its
         // full-walk sweep also reclaims what no ledger can name (epoch
         // dirs and leaves a crashed publish wrote that no manifest
@@ -1699,17 +1582,11 @@ object Upsert {
                                   tablePath: String, partitionCol: String,
                                   values: Seq[String],
                                   retain: Int = 2): Unit = {
-    if (values.isEmpty) return
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (EpochManifest.activeRoot(fs, root).isEmpty) return
+    if (values.isEmpty || activeOf(spark, tablePath).isEmpty) return
     withTableWriter(spark, tablePath) { w =>
-      val (epoch, rootInfo) = EpochManifest.activeRoot(w.fs, w.root)
-        .getOrElse(throw new IllegalStateException(
-          s"manifest vanished under $tablePath"))
       val touchedDirs = partitionDirsOf(partitionCol, values)
-      rewriteEntries(w, EpochManifest.sliceOf(w.fs, w.root, epoch,
-        rootInfo, touchedDirs), touchedDirs, partitionCol, retain)(identity)
+      rewriteEntries(w, w.manifest.slice(EpochManifest.Want.Dirs(touchedDirs)),
+        touchedDirs, partitionCol, retain)(identity)
     }
   }
 
@@ -1854,13 +1731,19 @@ object Upsert {
     lines.filter(_.startsWith("#stats\t"))
       .map(_.split("\t", -1)(2)).distinct.sorted
 
-  /** Zone maps for the partitions `slice` holds (one small aggregate,
-    * bounded by the slice — callers pass the freshly-written epoch
-    * dir's read-back, i.e. exactly the touched partitions). */
-  private def computeStats(slice: DataFrame, partitionCol: String,
-                           cols: Seq[String])
+  /** Zone maps for the dirs epoch `epoch` just wrote, from one small
+    * aggregate over their read-back, bounded by the touched set. The
+    * read-back goes through [[readMapped]] with the inventory
+    * [[listEpoch]] returned, so it lists nothing again. */
+  private def computeStats(spark: org.apache.spark.sql.SparkSession,
+                           tablePath: String, epoch: Long, dirs: Set[String],
+                           files: Map[(String, Long), Seq[(String, Long)]],
+                           schema: Option[org.apache.spark.sql.types.StructType],
+                           partitionCol: String, cols: Seq[String])
       : Map[(String, String), (String, String)] = {
-    if (cols.isEmpty) return Map.empty
+    if (cols.isEmpty || dirs.isEmpty) return Map.empty
+    val slice = readMapped(spark, tablePath, dirs.toSeq.sorted.map(_ -> epoch),
+      schema, Map.empty, files).get
     val aggs = cols.flatMap(c => Seq(
       min(col(c)).cast("string").as(s"_mn_$c"),
       max(col(c)).cast("string").as(s"_mx_$c")))
@@ -1878,18 +1761,6 @@ object Upsert {
       }.toMap
   }
 
-  /** RANGE READER with manifest-level data skipping: resolve only the
-    * partition dirs whose zone map can contain a `column` value in
-    * [`lo`, `hi`] (inclusive; either bound may be null for open), then
-    * apply the exact filter. Dirs without a recorded zone map — a
-    * legacy table, an all-null partition, a column never registered —
-    * are always read (pruning is strictly an optimization, never a
-    * correctness gate). Comparison is typed via the recorded schema:
-    * numeric columns compare as numbers, strings lexically; any other
-    * type skips pruning. This is the partition-key-independent sibling
-    * of [[readManifestedPartitions]]: the zone maps let a narrow
-    * consumer skip the listing cost of partitions whose VALUE RANGE
-    * rules them out, the lakehouse data-skipping shape. */
   /** The zone-map comparator for one recorded column type.
     * Double.parseDouble, not BigDecimal: Spark's min/max over a
     * double column records "NaN"/"Infinity" in the #stats lines,
@@ -1919,63 +1790,36 @@ object Upsert {
     }
   }
 
+  /** RANGE READER with manifest-level data skipping: resolve only the
+    * partition dirs whose zone map can contain a `column` value in
+    * [`lo`, `hi`] (inclusive; either bound may be null for open), then
+    * apply the exact filter. Dirs without a recorded zone map — a
+    * legacy table, an all-null partition, a column never registered —
+    * are always read (pruning is strictly an optimization, never a
+    * correctness gate). Comparison is typed via the recorded schema:
+    * numeric columns compare as numbers, strings lexically; any other
+    * type skips pruning. This is the partition-key-independent sibling
+    * of [[readManifestedPartitions]]: the zone maps let a narrow
+    * consumer skip the listing cost of partitions whose VALUE RANGE
+    * rules them out, the lakehouse data-skipping shape. The same test
+    * first prunes whole buckets at the read entry
+    * ([[EpochManifest.Want.Zone]]). */
   def readManifestedRange(spark: org.apache.spark.sql.SparkSession,
                           tablePath: String, column: String,
                           lo: Any, hi: Any): DataFrame = {
-    import org.apache.spark.sql.types._
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (_, rootInfo) = EpochManifest.activeRoot(fs, root).getOrElse(
-      throw new IllegalStateException(s"no manifest under $tablePath"))
-    val dt: Option[DataType] = ddlOf(rootInfo.lines)
-      .map(StructType.fromDDL)
+    val active = manifestOf(spark, tablePath)
+    val cmp: Option[(String, String) => Int] = ddlOf(active.lines)
+      .map(org.apache.spark.sql.types.StructType.fromDDL)
       .flatMap(_.fields.find(_.name.equalsIgnoreCase(column)))
-      .map(_.dataType)
-    val cmp: Option[(String, String) => Int] = dt.flatMap(statsComparator)
-    // sharded manifests prune at the LEAF tier first: the root's
-    // per-bucket `#bstats` aggregates (min-of-mins/max-of-maxs over
-    // the bucket's dirs, emitted only when EVERY dir in the bucket
-    // carries a zone map for the column — conservative) decide which
-    // leaves even load, so a narrow range over a wide table reads a
-    // handful of buckets, not the whole per-dir mass
-    val lines =
-      if (!rootInfo.isV2) rootInfo.lines
-      else {
-        val bstats = rootInfo.lines.filter(_.startsWith("#bstats\t"))
-          .map { l =>
-            val a = l.split("\t", -1)
-            import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-            ((a(1).toInt, a(2)),
-              (ExternalCatalogUtils.unescapePathName(a(3)),
-                ExternalCatalogUtils.unescapePathName(a(4))))
-          }.toMap
-        def bucketMightMatch(b: Int): Boolean =
-          (cmp, bstats.get((b, column))) match {
-            case (Some(c), Some((mn, mx))) =>
-              (lo == null || c(mx, lo.toString) >= 0) &&
-                (hi == null || c(mn, hi.toString) <= 0)
-            case _ => true // no comparator / no aggregate: must load
-          }
-        val cand = rootInfo.leafRefs.filter(kv => bucketMightMatch(kv._1))
-        rootInfo.small ++ EpochManifest.mapLeaves(fs, root,
-          rootInfo.copy(leafRefs = cand))(identity).flatten
-      }
-    val stats = statsOf(lines)
-    def mightMatch(dir: String): Boolean = (cmp, stats.get((dir, column))) match {
-      case (Some(c), Some((mn, mx))) =>
-        (lo == null || c(mx, lo.toString) >= 0) &&
-          (hi == null || c(mn, hi.toString) <= 0)
-      case _ => true // no comparator or no zone map: never prune
-    }
-    val pruned = lines.filter(l =>
-      l.startsWith("#") || mightMatch(parseManifestEntry(l)._1))
-    val base =
-      if (entryLines(pruned).nonEmpty) readEntries(spark, tablePath, pruned)
-      else ddlOf(lines).map(d => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType.fromDDL(d))).getOrElse(throw new IllegalStateException(
-        s"readManifestedRange: every partition pruned and no recorded " +
-          s"schema under $tablePath to shape an empty result"))
+      .flatMap(f => statsComparator(f.dataType))
+    // no comparator or no zone map: never prune
+    def overlaps(mn: String, mx: String): Boolean = cmp.forall(c =>
+      (lo == null || c(mx, lo.toString) >= 0) &&
+        (hi == null || c(mn, hi.toString) <= 0))
+    val m = active.slice(EpochManifest.Want.Zone(column, overlaps))
+    val stats = statsOf(m.lines)
+    val base = readSlice(spark, tablePath, m,
+      d => stats.get((d, column)).forall { case (mn, mx) => overlaps(mn, mx) })
     val exact = (Option(lo), Option(hi)) match {
       case (Some(l), Some(h)) => col(column).between(lit(l), lit(h))
       case (Some(l), None) => col(column) >= lit(l)
@@ -2068,9 +1912,9 @@ object Upsert {
                              newName: String, retain: Int = 2): Unit = {
     // writer lease — see withTableWriter; no `return` inside
     withTableWriter(spark, tablePath) { w =>
-    val (epoch, lines) = EpochManifest.active(w.fs, w.root).getOrElse(
-      throw new IllegalStateException(s"no manifest under $tablePath"))
-    val ddl = ddlOf(lines).getOrElse(throw new IllegalStateException(
+    val cur = w.manifest.slice(EpochManifest.Want.All)
+    val (epoch, lines) = (cur.epoch, cur.lines)
+    val ddl = cur.ddl.getOrElse(throw new IllegalStateException(
       s"renameManifestedColumn: $tablePath has no recorded schema " +
         "(written before the #ddl header) — run compactManifested " +
         "first to stamp one"))
@@ -2082,7 +1926,7 @@ object Upsert {
       s"renameManifestedColumn: no column '$oldName' in $ddl")
     require(!sch.fieldNames.exists(_.equalsIgnoreCase(newName)),
       s"renameManifestedColumn: column '$newName' already exists")
-    val entries = entryLines(lines).map(parseManifestEntry)
+    val entries = cur.entries
     entries.headOption.foreach { case (d, _) =>
       val partCol = org.apache.spark.sql.catalyst.catalog
         .ExternalCatalogUtils.unescapePathName(d.takeWhile(_ != '='))
@@ -2095,7 +1939,7 @@ object Upsert {
     // physical default must match what the files actually store
     val canonical = sch.fields
       .find(_.name.equalsIgnoreCase(oldName)).get.name
-    val pmap = pmapOf(lines)
+    val pmap = cur.pmap
     val refEpochs = entries.map(_._2).distinct
     val newPmap = refEpochs.map { e =>
       val m = pmap.getOrElse(e, Map.empty[String, String])
@@ -2162,9 +2006,9 @@ object Upsert {
                            retain: Int = 2): Unit = {
     // writer lease — see withTableWriter; no `return` inside
     withTableWriter(spark, tablePath) { w =>
-    val (epoch, lines) = EpochManifest.active(w.fs, w.root).getOrElse(
-      throw new IllegalStateException(s"no manifest under $tablePath"))
-    val ddl = ddlOf(lines).getOrElse(throw new IllegalStateException(
+    val cur = w.manifest.slice(EpochManifest.Want.All)
+    val (epoch, lines) = (cur.epoch, cur.lines)
+    val ddl = cur.ddl.getOrElse(throw new IllegalStateException(
       s"dropManifestedColumn: $tablePath has no recorded schema " +
         "(written before the #ddl header) — run compactManifested " +
         "first to stamp one"))
@@ -2173,7 +2017,7 @@ object Upsert {
       s"dropManifestedColumn: no column '$name' in $ddl")
     require(sch.fields.length > 1,
       s"dropManifestedColumn: cannot drop the last column of $tablePath")
-    val entries = entryLines(lines).map(parseManifestEntry)
+    val entries = cur.entries
     entries.headOption.foreach { case (d, _) =>
       val partCol = org.apache.spark.sql.catalyst.catalog
         .ExternalCatalogUtils.unescapePathName(d.takeWhile(_ != '='))
@@ -2186,7 +2030,7 @@ object Upsert {
     // retired physical name must match what the files actually store
     val canonical = sch.fields
       .find(_.name.equalsIgnoreCase(name)).get.name
-    val pmap = pmapOf(lines)
+    val pmap = cur.pmap
     val refEpochs = entries.map(_._2).distinct
     val newPmap = refEpochs.map { e =>
       val m = pmap.getOrElse(e, Map.empty[String, String])
@@ -2364,7 +2208,8 @@ object Upsert {
       // — full walk —
       val refs: Set[(Long, String)] =
         (oldest to keep).filter(_ >= 0).flatMap { m =>
-          entryLines(EpochManifest.read(fs, root, m).toSeq.flatten)
+          entryLines(EpochManifest.readRoot(fs, root, m).toSeq
+              .flatMap(EpochManifest.materialize(fs, root, _)))
             .map(parseManifestEntry).map { case (d, e) => (e, d) }
         }.toSet
       fs.listStatus(root).foreach { st =>
@@ -2426,6 +2271,14 @@ object Upsert {
       }
     } catch { case _: Throwable => () }
 
+  /** The epoch manifest: every manifested table's one source of truth
+    * for which epoch dir holds each partition, and the only module that
+    * knows whether a manifest is one file (v1) or a root plus leaves
+    * (v2). Readers and writers resolve a manifest through ONE read
+    * entry — [[EpochManifest.active]] or [[EpochManifest.at]] gives the
+    * root, `Root.slice(Want)` the leaves a caller needs — and never
+    * branch on the format; only the publish ([[Upsert.commitEpoch]]'s
+    * choice of `publish` or `publishDiff`) and the sweep do. */
   private[graft] object EpochManifest {
     import org.apache.hadoop.fs.Path
     private val Name = "_manifest_(\\d+)".r
@@ -2503,24 +2356,8 @@ object Upsert {
       RootInfo(lines, refs, lines.exists(_.startsWith("#leafn\t")))
     }
 
-    /** Root file of the highest published manifest — no leaf
-      * materialization (the diff publish and pruned readers' entry). */
-    def activeRoot(fs: org.apache.hadoop.fs.FileSystem,
-                   root: Path): Option[(Long, RootInfo)] = {
-      if (!fs.exists(root)) return None
-      val manifests = fs.listStatus(root).flatMap { st =>
-        st.getPath.getName match {
-          case Name(n) => Some(n.toLong -> st.getPath)
-          case _ => None
-        }
-      }
-      if (manifests.isEmpty) None
-      else {
-        val (epoch, p) = manifests.maxBy(_._1)
-        readLines(fs, p).map(lines => (epoch, parseRoot(lines)))
-      }
-    }
-
+    /** Root file of manifest `epoch`, or None if absent — the publish
+      * and sweep paths' view, which works on the format itself. */
     def readRoot(fs: org.apache.hadoop.fs.FileSystem, root: Path,
                  epoch: Long): Option[RootInfo] =
       readLines(fs, new Path(root, s"_manifest_$epoch"))
@@ -2541,7 +2378,7 @@ object Upsert {
       * damaged), not an empty bucket: reading it as empty would
       * silently serve a partial table with whole buckets of partitions
       * missing from every read path (ADVICE r19, medium). Throw the
-      * same loud shape as [[Upsert.readManifestedAt]] instead. */
+      * same loud shape as a swept manifest instead. */
     def readLeaf(fs: org.apache.hadoop.fs.FileSystem, root: Path,
                  leafEpoch: Long, bucket: Int): Seq[String] = {
       leafReadCount.incrementAndGet()
@@ -2554,32 +2391,132 @@ object Upsert {
             "to read a partial table"))
     }
 
-    /** Manifest `epoch` as a reader or writer of some partition dirs
-      * needs it: a v1 manifest whole, or a v2 root plus the leaves of
-      * the buckets holding those dirs, keyed by bucket. */
-    final case class Slice(epoch: Long, info: RootInfo,
-                           leaves: Map[Int, Seq[String]]) {
-      /** The root's small lines plus the loaded leaves' lines. */
-      def lines: Seq[String] =
-        if (!info.isV2) info.lines
-        else info.small ++ leaves.toSeq.sortBy(_._1).flatMap(_._2)
+    /** Which leaf buckets [[Root.slice]] loads beside the root. A v1
+      * manifest is its own root, so every want loads nothing there. */
+    sealed trait Want
+    object Want {
+      /** Every bucket: a full-table read or rewrite. */
+      case object All extends Want
+      /** The buckets holding these partition dirs. */
+      final case class Dirs(dirs: Iterable[String]) extends Want
+      /** The buckets holding these partition values' dirs; all of them
+        * when the root does not record the partition column. */
+      final case class Values(values: Seq[String]) extends Want
+      /** The buckets whose `#bstats` zone map for `column` passes
+        * `keep(min, max)`; a bucket without one always loads. */
+      final case class Zone(column: String,
+                            keep: (String, String) => Boolean) extends Want
+      /** The buckets whose leaf differs from `other`'s — a diff's
+        * endpoints: a bucket both carry by the same reference holds the
+        * same dirs at the same epochs on both sides. */
+      final case class Changed(other: Root) extends Want
     }
 
-    /** The [[Slice]] holding `dirs`: O(touched buckets) leaf reads. */
-    def sliceOf(fs: org.apache.hadoop.fs.FileSystem, root: Path,
-                epoch: Long, info: RootInfo,
-                dirs: Iterable[String]): Slice =
-      sliceOfBuckets(fs, root, epoch, info, dirs.map(bucketOf))
+    /** THE READ ENTRY. Every manifested reader and writer resolves its
+      * manifest here — [[active]] or [[at]] gives the [[Root]], whose
+      * `lines` answer the root-resident facts (epoch, `#ddl`, `#pmap`,
+      * the `#rename`/`#dropcol`/`#widen` events) without loading a
+      * leaf, and whose `slice` loads the buckets a [[Want]] names, in
+      * parallel, each leaf parsed on its loading thread. Whether a
+      * manifest is one file (v1) or a tree (v2) is decided here and in
+      * the publish and sweep paths below; no reader branches on it.
+      *
+      * The active manifest's root, or None for an uninitialized
+      * table. */
+    def active(fs: org.apache.hadoop.fs.FileSystem,
+               root: Path): Option[Root] = {
+      if (!fs.exists(root)) return None
+      val manifests = fs.listStatus(root).flatMap { st =>
+        st.getPath.getName match {
+          case Name(n) => Some(n.toLong -> st.getPath)
+          case _ => None
+        }
+      }
+      if (manifests.isEmpty) None
+      else {
+        val (epoch, p) = manifests.maxBy(_._1)
+        readLines(fs, p).map(ls => new Root(fs, root, epoch, parseRoot(ls)))
+      }
+    }
 
-    def sliceOfBuckets(fs: org.apache.hadoop.fs.FileSystem, root: Path,
-                       epoch: Long, info: RootInfo,
-                       buckets: Iterable[Int]): Slice =
-      Slice(epoch, info,
-        if (!info.isV2) Map.empty
-        else parMap(buckets.toSeq.distinct.sorted) { b =>
-          b -> info.leafRefs.get(b).map(le => readLeaf(fs, root, le, b))
-            .getOrElse(Seq.empty)
+    /** Manifest `epoch`'s root — loudly, on resolution, when it is gone
+      * (time travel and the change feed past the retention window). */
+    def at(fs: org.apache.hadoop.fs.FileSystem, root: Path,
+           epoch: Long): Root =
+      new Root(fs, root, epoch, readRoot(fs, root, epoch).getOrElse(
+        throw new IllegalStateException(
+          s"no manifest $epoch under $root — missing or already swept " +
+            "(raise the merge's retain knob to keep more history)")))
+
+    /** One resolved manifest root; see [[active]]. */
+    final class Root private[EpochManifest] (
+        fs: org.apache.hadoop.fs.FileSystem, dir: Path,
+        val epoch: Long, val info: RootInfo) {
+      /** The root-resident lines: on a v1 manifest, every line. */
+      def lines: Seq[String] = if (info.isV2) info.small else info.lines
+
+      def slice(want: Want): Slice = {
+        val buckets: Iterable[Int] =
+          if (!info.isV2) Nil
+          else want match {
+            case Want.All => info.leafRefs.keys
+            case Want.Dirs(dirs) => dirs.map(bucketOf)
+            case Want.Values(vs) => info.partColOpt.fold(info.leafRefs.keys)(
+              pc => partitionDirsOf(pc, vs).map(bucketOf))
+            case Want.Zone(column, keep) =>
+              val zones = info.lines.filter(_.startsWith("#bstats\t")).map { l =>
+                val a = l.split("\t", -1)
+                import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+                ((a(1).toInt, a(2)), (ExternalCatalogUtils.unescapePathName(a(3)),
+                  ExternalCatalogUtils.unescapePathName(a(4))))
+              }.toMap
+              info.leafRefs.keys.filter(b => zones.get((b, column)).forall(keep.tupled))
+            case Want.Changed(other) =>
+              if (!other.info.isV2) info.leafRefs.keys
+              else (0 until LeafBuckets).filter(b =>
+                info.leafRefs.get(b) != other.info.leafRefs.get(b))
+          }
+        Slice(this, parMap(buckets.toSeq.distinct.sorted) { b =>
+          b -> new Leaf(info.leafRefs.get(b).fold(Seq.empty[String])(
+            le => readLeaf(fs, dir, le, b)))
         }.toMap)
+      }
+    }
+
+    /** One loaded leaf, its entries and file inventories parsed once on
+      * the loading thread (at 10⁶ dirs a single-threaded re-scan of the
+      * concatenated lines was the whole resolution cost). */
+    final class Leaf(val lines: Seq[String]) {
+      val entries: Seq[(String, Long)] =
+        entryLines(lines).map(parseManifestEntry)
+      val files: Map[(String, Long), Seq[(String, Long)]] = filesOf(lines)
+    }
+
+    /** A manifest as a reader or writer of some partition dirs needs
+      * it: the root plus the loaded leaves, keyed by bucket. The root
+      * and the leaves partition the dir space disjointly (a v1 root
+      * holds every dir, a v2 root none), so entries concatenate and
+      * inventories union. */
+    final case class Slice(root: Root, leaves: Map[Int, Leaf]) {
+      def epoch: Long = root.epoch
+      def info: RootInfo = root.info
+      private def loaded: Seq[Leaf] = leaves.toSeq.sortBy(_._1).map(_._2)
+      /** The root-resident lines plus the loaded leaves' lines. */
+      lazy val lines: Seq[String] = root.lines ++ loaded.flatMap(_.lines)
+      lazy val entries: Seq[(String, Long)] =
+        entryLines(root.lines).map(parseManifestEntry) ++
+          loaded.flatMap(_.entries)
+      lazy val files: Map[(String, Long), Seq[(String, Long)]] =
+        loaded.foldLeft(filesOf(root.lines))(_ ++ _.files)
+      def ddl: Option[String] = ddlOf(root.lines)
+      lazy val schema: Option[org.apache.spark.sql.types.StructType] =
+        ddl.map(org.apache.spark.sql.types.StructType.fromDDL)
+      lazy val pmap: Map[Long, Map[String, String]] = pmapOf(root.lines)
+      /** The zone-map columns a rewrite maintains: the tree root's
+        * record, or the columns a single file's `#stats` lines name. */
+      def statsCols: Seq[String] =
+        if (info.isV2) info.statsColsRec else statsColsOf(info.lines)
+    }
 
     /** Bounded parallel map for leaf IO: a full materialization reads
       * up to [[LeafBuckets]] small files — sequential round-trips
@@ -2604,25 +2541,14 @@ object Upsert {
         finally pool.shutdown()
       }
 
-    /** Parallel structured fold over a v2 root's leaves: read + parse
-      * each leaf on the pool and merge the per-leaf results — the
-      * full-resolution path's escape from a single-threaded O(N) line
-      * parse (measured 14.9 s at 10⁶ dirs through [[materialize]]).
-      * Leaves partition the dir space disjointly, so any per-leaf
-      * extraction merges by concatenation/map-union. */
-    def mapLeaves[B](fs: org.apache.hadoop.fs.FileSystem, root: Path,
-                     info: RootInfo)(f: Seq[String] => B): Seq[B] =
-      parMap(info.leafRefs.toSeq.sortBy(_._1)) { case (b, le) =>
-        f(readLeaf(fs, root, le, b)) }
-
     /** Per-bucket zone-map aggregates, `#bstats\t<bucket>\t<col>\t
       * <mn>\t<mx>` — the LEAF tier of [[Upsert.readManifestedRange]]'s
-      * pruning: min-of-mins/max-of-maxs over a bucket's dirs, emitted
-      * ONLY when every dir in the bucket carries a `#stats` line for
-      * the column (an all-null partition records none and must never
-      * be pruned — the bucket then always loads; conservative).
-      * Aggregation uses [[Upsert.statsComparator]], the exact
-      * comparator the range reader prunes with. */
+      * pruning ([[Want.Zone]]): min-of-mins/max-of-maxs over a bucket's
+      * dirs, emitted ONLY when every dir in the bucket carries a
+      * `#stats` line for the column (an all-null partition records none
+      * and must never be pruned — the bucket then always loads;
+      * conservative). Aggregation uses [[Upsert.statsComparator]], the
+      * exact comparator the range reader prunes with. */
     def bstatsLines(small: Seq[String],
                     buckets: Map[Int, Seq[String]]): Seq[String] = {
       val types = ddlOf(small)
@@ -2660,8 +2586,9 @@ object Upsert {
     }
 
     /** Materialize a root's full logical line set (small lines + all
-      * referenced leaves' lines) — the compatibility surface every
-      * pre-tree consumer reads; v1 manifests pass through verbatim. */
+      * referenced leaves' lines, without the tree's aggregates) — what
+      * the full-line publish, the ledger repair and the full-walk sweep
+      * diff; v1 manifests pass through verbatim. */
     private[graft] def materialize(fs: org.apache.hadoop.fs.FileSystem,
                                    root: Path, info: RootInfo): Seq[String] =
       if (!info.isV2) info.lines
@@ -2670,21 +2597,6 @@ object Upsert {
           l.startsWith("#bstats\t")) ++
         parMap(info.leafRefs.toSeq.sortBy(_._1)) { case (b, le) =>
           readLeaf(fs, root, le, b) }.flatten
-
-    /** (epoch, manifest lines) of the highest complete manifest, or
-      * None for an uninitialized table. Lines are format-agnostic —
-      * the SCD2 table stores closed-delta tokens, the partitioned
-      * merge stores `dirname\tepoch` entries. v2 manifests
-      * materialize transparently. */
-    def active(fs: org.apache.hadoop.fs.FileSystem,
-               root: Path): Option[(Long, Seq[String])] =
-      activeRoot(fs, root).map { case (e, info) =>
-        (e, materialize(fs, root, info)) }
-
-    /** Lines of one specific epoch's manifest, or None if absent. */
-    def read(fs: org.apache.hadoop.fs.FileSystem, root: Path,
-             epoch: Long): Option[Seq[String]] =
-      readRoot(fs, root, epoch).map(materialize(fs, root, _))
 
     private def readLines(fs: org.apache.hadoop.fs.FileSystem,
                           p: Path): Option[Seq[String]] = {

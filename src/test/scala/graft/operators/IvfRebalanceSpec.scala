@@ -207,6 +207,38 @@ class IvfRebalanceSpec extends SparkSpec {
     assert(pq.refreshRecentered("vec_id", "embedding").isEmpty)
   }
 
+  test("kill after the recenter's centroid-version write (before the " +
+      "epoch flip): old routing stays active; the retry matches an " +
+      "uncrashed recenter") {
+    def drifted(name: String): IvfIndex = {
+      val idx = new IvfIndex(spark, Files.createTempDirectory(name).toString)
+      idx.build(emb.filter($"vec_id" <= 40), "vec_id", "embedding", k = 2,
+        iters = 4)
+      idx.append(emb.filter($"vec_id" > 40), "vec_id", "embedding")
+      idx
+    }
+    def routing(idx: IvfIndex): Seq[(Int, Seq[Double])] =
+      idx.centroids().select("cell", "centroid")
+        .as[(Int, Seq[Double])].collect().sortBy(_._1).toSeq
+    val clean = drifted("graft_ivfrecc")
+    val cleanMoved = clean.recenter("embedding", minCosine = 0.999999)
+    assert(cleanMoved.nonEmpty)
+    val idx = drifted("graft_ivfreck")
+    val e0 = idx.epoch().get
+    val before = routing(idx)
+    graft.FailPoint.arm("ivf_recenter_after_centroids")
+    try intercept[graft.FailPoint.Kill] {
+      idx.recenter("embedding", minCosine = 0.999999)
+    } finally graft.FailPoint.disarm()
+    assert(idx.epoch().get == e0)
+    assert(routing(idx) == before)
+    assert(idx.recenter("embedding", minCosine = 0.999999) == cleanMoved)
+    assert(idx.epoch().get.cv == clean.epoch().get.cv)
+    assert(routing(idx) == routing(clean))
+    val q = Seq(10.0, 2.0, 0.0, 0.0)
+    assert(fullProbeIds(idx, 10, q) == fullProbeIds(clean, 10, q))
+  }
+
   test("split retry after an INTERVENING append still converges with " +
       "no double-served rows") {
     val base = Files.createTempDirectory("graft_ivfrebiv").toString

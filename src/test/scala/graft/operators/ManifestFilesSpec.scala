@@ -799,4 +799,65 @@ class ManifestFilesSpec extends SparkSpec {
         ex.getMessage)
     } finally Upsert.EpochManifest.shardThreshold = saved
   }
+
+  test("the read entry loads only the leaves a reader needs: root " +
+      "facts read no leaf, the feed diff only the buckets whose refs " +
+      "differ, the pruned read only the wanted values' buckets") {
+    val saved = Upsert.EpochManifest.shardThreshold
+    Upsert.EpochManifest.shardThreshold = 1
+    try {
+      val w = java.nio.file.Files
+        .createTempDirectory("graft_leafreads").toString
+      val path = s"$w/tbl"
+      val parts = (0 until 40).map(i => f"p$i%02d")
+      def merge(ver: Long, rows: Seq[(Long, String, Double)]): Unit =
+        Upsert.mergeIntoManifested(spark, path,
+          table(rows: _*).withColumn("ver", lit(ver)), keys, "part",
+          "ver", retain = 8)
+      merge(1L, parts.zipWithIndex.map { case (p, i) => (i.toLong, p, 1.0) })
+      merge(2L, Seq((0L, "p00", 2.0), (1L, "p01", 2.0)))
+      merge(3L, Seq((2L, "p02", 3.0)))
+      // metadata only: every leaf carries by reference
+      Upsert.renameManifestedColumn(spark, path, "v", "w", retain = 8)
+      // leaf refs per bucket, straight from a root file
+      def refs(e: Long): Map[Int, Long] = {
+        val f = new java.io.File(path, s"_manifest_$e")
+        scala.io.Source.fromFile(f).getLines().filter(_.startsWith("#leaf\t"))
+          .map { l => val a = l.split("\t", -1); a(1).toInt -> a(2).toLong }
+          .toMap
+      }
+      assert(refs(3).size > 8, "expected a sharded manifest")
+      def differing(a: Long, b: Long): Int =
+        (refs(a).keySet ++ refs(b).keySet)
+          .count(k => refs(a).get(k) != refs(b).get(k))
+      def leafReads[T](body: => T): Long = {
+        val before = Upsert.EpochManifest.leafReadCount.get()
+        body
+        Upsert.EpochManifest.leafReadCount.get() - before
+      }
+      assert(leafReads(Upsert.manifestedEpoch(spark, path)) == 0)
+      assert(leafReads(Upsert.manifestedSchema(spark, path)) == 0)
+      assert(leafReads(Upsert.schemaEventsBetween(spark, path, 0, 3)) == 0)
+      assert(Upsert.schemaEventsBetween(spark, path, 0, 3).map(_._2) ==
+        Seq("rename"))
+      assert(leafReads(Upsert.changesSince(spark, path, 3, keys)) == 0)
+      // feed: both sides load exactly the buckets whose refs differ
+      assert(differing(1, 3) > 0 && differing(1, 3) < refs(3).size)
+      assert(leafReads(Upsert.changesBetween(spark, path, 1, 3, keys)) ==
+        2 * differing(1, 3))
+      assert(leafReads(Upsert.changeFeedSpans(spark, path, 0, 3, keys)) ==
+        2 * differing(0, 3))
+      assert(leafReads(Upsert.changesSince(spark, path, 0, keys)) ==
+        2 * differing(0, 3))
+      // pruned read: the wanted values' buckets, hit and miss alike
+      val wanted = Seq("p05", "p17", "nope")
+      val buckets = wanted.map(v =>
+        Upsert.EpochManifest.bucketOf(s"part=$v")).toSet
+      assert(leafReads(Upsert.readManifestedPartitions(spark, path,
+        wanted)) == buckets.count(refs(3).contains))
+      assert(Upsert.readManifestedPartitions(spark, path, wanted)
+        .select("part").as[String].collect().sorted.toSeq ==
+        Seq("p05", "p17"))
+    } finally Upsert.EpochManifest.shardThreshold = saved
+  }
 }

@@ -118,7 +118,9 @@ class Scd2ManifestSpec extends SparkSpec {
       // current_e dirs are the active epoch and the one retained
       val root = new org.apache.hadoop.fs.Path(path)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val (epoch, tokens) = Upsert.EpochManifest.active(fs, root).get
+      val active = Upsert.EpochManifest.active(fs, root).get
+      val (epoch, tokens) =
+        (active.epoch, active.slice(Upsert.EpochManifest.Want.All).lines)
       val onDisk = new java.io.File(s"$path/closed").listFiles().toSeq
         .map(_.getName).filter(n => n.startsWith("delta_") ||
           n.startsWith("_delta_") || n.startsWith("_stage_"))

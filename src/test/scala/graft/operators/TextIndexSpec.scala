@@ -310,6 +310,43 @@ class TextIndexSpec extends SparkSpec {
     assert(stAfter.agg(sum($"n_docs")).as[Long].head() == 3L)
   }
 
+  test("purgeDeletedPostings: a kill after the postings swap " +
+      "(tombstones not yet cleared) converges on retry to the " +
+      "uncrashed purge") {
+    val docs = Seq(
+      (1L, "spark join scan"), (2L, "join batch join"),
+      (3L, "spark batch"), (4L, "spark join other")).toDF("id", "txt")
+    def deleted(name: String): String = {
+      val base = java.nio.file.Files.createTempDirectory(name).toString
+      TextIndex.buildScoredPostings(docs, "id", "txt", base, buckets = 4)
+      TextIndex.deleteScoredPostings(Seq(1L, 2L).toDF("id"), "id", base,
+        buckets = 4)
+      base
+    }
+    def state(base: String) = {
+      val (p, st) = TextIndex.scoredPostingsReaders(spark, base, buckets = 4)
+      val root = s"$base/scored_postings_b4"
+      (TextIndex.bm25TopK(p, st, Seq("spark", "join"), k = 6, buckets = 4)
+        .as[(Long, Double)].collect().toSeq,
+        st.agg(sum($"n_docs"), sum($"total_dl")).as[(Long, Long)].head(),
+        StagedCommit.readCommitted(spark, s"$root/postings")
+          .select("doc_id").as[Long].collect().sorted.toSeq,
+        new java.io.File(s"$root/tombstones").exists,
+        TextIndex.sweepOrphanedDeleteStats(spark, base, buckets = 4))
+    }
+    val clean = deleted("textindex_purgec")
+    assert(TextIndex.purgeDeletedPostings(spark, clean, buckets = 4) > 0)
+    val crashed = deleted("textindex_purgek")
+    graft.FailPoint.arm("bm25_purge_after_overwrite")
+    try intercept[graft.FailPoint.Kill] {
+      TextIndex.purgeDeletedPostings(spark, crashed, buckets = 4)
+    } finally graft.FailPoint.disarm()
+    // the tombstones still mask the deleted docs until the retry
+    assert(new java.io.File(s"$crashed/scored_postings_b4/tombstones").exists)
+    assert(TextIndex.purgeDeletedPostings(spark, crashed, buckets = 4) >= 0)
+    assert(state(crashed) == state(clean))
+  }
+
   test("updateScoredPostings: in-place re-index == from-scratch; " +
       "repeated updates of the SAME doc each subtract (the salted " +
       "retire half); redelivery no-ops; post-purge crash converges") {
@@ -537,6 +574,59 @@ class TextIndexSpec extends SparkSpec {
       buckets = 2)
     assert(st2.agg(sum($"n_docs")).as[Long].head() == 5L)
     assert(p2.filter($"doc_id" === 1L).count() == 0)
+  }
+
+  test("compactScoredPostings: a kill after the postings fold or after " +
+      "the purge ledger converges on retry to the uncrashed compaction") {
+    val docs = Seq(
+      (1L, "spark join scan"), (2L, "join batch join"),
+      (3L, "spark batch"), (4L, "spark join other")).toDF("id", "txt")
+    def churned(name: String): String = {
+      val base = java.nio.file.Files.createTempDirectory(name).toString
+      TextIndex.buildScoredPostings(docs, "id", "txt", base, buckets = 2)
+      TextIndex.appendScoredPostings(
+        Seq((5L, "spark words more")).toDF("id", "txt"), "id", "txt",
+        base, buckets = 2, salt = "b1")
+      TextIndex.deleteScoredPostings(Seq(2L).toDF("id"), "id", base,
+        buckets = 2, salt = "b2")
+      TextIndex.appendScoredPostings(
+        Seq((6L, "join words")).toDF("id", "txt"), "id", "txt",
+        base, buckets = 2, salt = "b3")
+      base
+    }
+    def state(base: String) = {
+      val root = s"$base/scored_postings_b2"
+      val fs = new org.apache.hadoop.fs.Path(root)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def files(p: String, pick: String => Boolean): Int = {
+        var n = 0
+        val it = fs.listFiles(new org.apache.hadoop.fs.Path(p), true)
+        while (it.hasNext) if (pick(it.next().getPath.getName)) n += 1
+        n
+      }
+      val (p, st) = TextIndex.scoredPostingsReaders(spark, base, buckets = 2)
+      (TextIndex.bm25TopK(p, st, Seq("spark", "join"), k = 10, buckets = 2)
+        .as[(Long, Double)].collect().toSeq,
+        st.agg(sum($"n_docs"), sum($"total_dl")).as[(Long, Long)].head(),
+        files(s"$root/stats", _.endsWith(".parquet")),
+        Seq("postings", "stats").map(d => files(s"$root/$d", n =>
+          n.startsWith("_delta_") && n.endsWith("_SUCCESS"))),
+        TextIndex.sweepOrphanedDeleteStats(spark, base, buckets = 2))
+    }
+    val clean = churned("textindex_compc")
+    assert(TextIndex.compactScoredPostings(spark, clean, buckets = 2) > 0)
+    val want = state(clean)
+    for (site <- Seq("bm25_compact_after_postings",
+                     "bm25_compact_after_ledger")) {
+      val crashed = churned(s"textindex_compk_$site")
+      graft.FailPoint.arm(site)
+      try intercept[graft.FailPoint.Kill] {
+        TextIndex.compactScoredPostings(spark, crashed, buckets = 2)
+      } finally graft.FailPoint.disarm()
+      assert(TextIndex.compactScoredPostings(spark, crashed, buckets = 2) >= 0,
+        site)
+      assert(state(crashed) == want, site)
+    }
   }
 
   test("compactScoredPostings: a kill inside the stats-fold swap " +
